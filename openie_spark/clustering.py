@@ -8,6 +8,13 @@ when every k is skipped. The reference sets no random seed (run-to-run
 nondeterministic, SURVEY.md §5.3); we fix one — a documented delta that
 makes the whole pipeline reproducible.
 
+Degenerate fits are skipped like k < 2: when the vectors collapse to one
+point (e.g. every sentence vector is zero, as without word vectors),
+KMeans yields a single non-empty cluster and no silhouette exists. The
+reference's sklearn ``silhouette_score`` raises on such a labeling; we
+skip the fit (read from the fit's summary on the driver, no Spark job),
+so a corpus whose every fit is degenerate gets the all-zeros labels.
+
 Spark-first: ``pyspark.ml.clustering.KMeans`` is the distributed fit (the
 reference's sklearn call is driver-RAM-bound), and ``ClusteringEvaluator``
 computes a distributed squared-euclidean silhouette (sklearn default is
@@ -68,6 +75,8 @@ def cluster_sentences(
             continue
         km = KMeans(k=int(k), seed=seed, featuresCol="features", predictionCol="cluster")
         model = km.fit(vec_df)
+        if sum(1 for size in model.summary.clusterSizes if size) < 2:
+            continue  # one non-empty cluster: silhouette is undefined
         labeled = model.transform(vec_df)
         score = evaluator.evaluate(labeled)
         if score >= best_score:  # >= : larger cluster_size wins ties (reference)

@@ -60,7 +60,6 @@ class MergeConfig:
     max_rounds: int = 20
     max_group: int = 64  # cap candidates per (anchor, key) group
     strict_parity: bool = False  # reproduce the reference's in-edge drop
-    n_salts: int = 8
     dim: Optional[int] = None  # vector width; None → one-row peek
     # Reliable per-round checkpointing for the DataFrame fixpoint: when set,
     # each round materializes to parquet stage tables under this directory
@@ -71,49 +70,21 @@ class MergeConfig:
     # cheap insurance; pipeline.run_pipeline wires this automatically when a
     # work_dir is configured.
     checkpoint_dir: Optional[str] = None
-    # Incremental round discovery (r5): rounds ≥ 2 restrict candidate-group
-    # discovery to anchors adjacent to nodes the previous round actually
-    # changed. Sound because a group's outcome can only differ from last
-    # round if its membership edges were rewritten, a member's
-    # weight/descriptions changed (only applied mains), a new exclusion
-    # edge appeared (only incident to rewritten nodes), or a
-    # conflict-deferred entry must be re-proposed (the pre-conflict
-    # candidate set is folded into the affected set) — and in every case
-    # the group's anchor is the changed node or its one-hop neighbor.
-    # Output is IDENTICAL to full per-round discovery (A/B-pinned by
-    # test_incremental_discovery_equals_full and the exact
-    # kg_merge_fixpoint driver oracle, whose chain groups only become
-    # discoverable in round 2); True enables the anchor restriction.
-    # Default OFF: measured SLOWER at both benchmark scales — 1M-node
-    # fixpoint interleaved A/B 102.3s (inc) vs 97.2s (full) median, and
-    # the 384k-page capstone 748.3s vs 708.9s (BENCH/
-    # incremental_discovery_ab.json) — the per-round affected/anchors
-    # materializations and anchor semi-joins cost more than the
-    # membership-scan savings while per-round stage barriers dominate.
-    # Enable it where discovery's membership distinct is the round
-    # bottleneck (very wide graphs, late localized rounds).
-    incremental_discovery: bool = False
-    # Shuffle partitions for the fixpoint's rounds (r6, VERDICT r5 item 5):
-    # the session default (2× cores) is sized for the corpus-scale extract
-    # span, but fixpoint rounds shuffle the AGGREGATED graph — seconds-long
-    # stages where task-count overhead dominates. Interleaved 16-core A/B
-    # at 1M nodes / 3M edges (BENCH/shuffle_parts_ab.json): 8 partitions
-    # 83.1/82.3s vs 32 partitions 90.9/87.8s wall, identical CPU and exact
-    # merge counts — confirming the MERGE_TOPK_SCALING.md hypothesis that
-    # 2×-cores partitioning taxes second-long rounds ~7% (25% at 32 cores:
-    # 76.4s vs 103.6s at 1M rows). None → auto: rows/250k clamped to
-    # [8, 2×cores] (counts reused from the local-threshold dispatch, or
-    # one count pair on the forced-distributed path); explicit int pins
-    # it; 0 disables the policy (session conf untouched — the A/B lever).
-    round_shuffle_partitions: Optional[int] = None
 
 
-def suggest_round_shuffle_partitions(
+def suggest_round_partitions(
     spark, total_rows: int, rows_per_partition: int = 250_000
 ) -> int:
     """Data-volume-scaled shuffle-partition count for fixpoint rounds:
     ~250k graph rows per task, floored at 8 (skew headroom for AQE to
-    split), capped at the session shape (2× defaultParallelism)."""
+    split), capped at the session shape (2× defaultParallelism).
+
+    The session default (2× cores) is sized for the corpus-scale extract
+    span, but fixpoint rounds shuffle the AGGREGATED graph — seconds-long
+    stages where task-count overhead dominates. Interleaved 16-core A/B at
+    1M nodes / 3M edges (BENCH/shuffle_parts_ab.json): 8 partitions
+    83.1/82.3s vs 32 partitions 90.9/87.8s wall, identical CPU and exact
+    merge counts (25% at 32 cores: 76.4s vs 103.6s at 1M rows)."""
     cores = spark.sparkContext.defaultParallelism
     return int(max(8, min(2 * cores, total_rows // rows_per_partition or 1)))
 
@@ -124,7 +95,7 @@ _CONF_SCOPE_BASELINE: dict = {}   # id(session) -> pre-scope conf value
 
 
 @contextmanager
-def scoped_shuffle_partitions(spark, parts: Optional[int]):
+def scoped_shuffle_partitions(spark, parts: int):
     """Set ``spark.sql.shuffle.partitions`` for a fixpoint's rounds and
     restore it afterwards — RACE-SAFE under concurrent fixpoints in one
     session. Session conf is the only per-query lever Spark exposes for
@@ -136,12 +107,7 @@ def scoped_shuffle_partitions(spark, parts: Optional[int]):
     returns to its pre-scope value. Residual (documented) hazard: while
     any scope is open, concurrent scopes and unrelated queries in the
     same session run under the most recently set count — acceptable for
-    a batch pipeline stage; embedders running latency-sensitive
-    concurrent SQL should disable the policy (round_shuffle_partitions=0).
-    ``parts=None`` is a no-op scope."""
-    if parts is None:
-        yield
-        return
+    a batch pipeline stage."""
     key = id(spark)
     with _CONF_SCOPE_LOCK:
         depth = _CONF_SCOPE_DEPTH.get(key, 0)
@@ -182,31 +148,12 @@ def cosine_distance_col(u: F.Column, v: F.Column) -> F.Column:
     )
 
 
-def find_node_mapping(nodes: DataFrame, edges: DataFrame, cfg: MergeConfig) -> DataFrame:
-    """One round of candidate discovery → mapping(other_key → main_key).
-    See _find_node_mapping; this public wrapper always runs FULL discovery."""
-    mapping, _, joined = _find_node_mapping(nodes, edges, cfg)
-    if joined is not None:
-        joined.unpersist()  # drops the cache only; mapping lineage stands
-    return mapping
-
-
-def _find_node_mapping(
-    nodes: DataFrame,
-    edges: DataFrame,
-    cfg: MergeConfig,
-    anchor_filter: Optional[DataFrame] = None,
-    ) -> Tuple[DataFrame, DataFrame, Optional[DataFrame]]:
-    """One round of candidate discovery → (mapping(other → main), touched,
-    joined-cache handle — unpersist it when the round's consumers are done).
-
-    ``anchor_filter`` (col ``anchor``): restrict discovery to these group
-    anchors — the incremental-rounds path (see MergeConfig.
-    incremental_discovery for the soundness argument). ``touched`` is the
-    pre-conflict candidate node set (every other/main that appeared in a
-    cosine-passing candidate entry, INCLUDING entries later dropped by
-    conflict resolution) — the fixpoint folds it into the next round's
-    affected set so deferred merges are re-proposed.
+def find_node_mapping(
+    nodes: DataFrame, edges: DataFrame, cfg: MergeConfig
+) -> Tuple[DataFrame, Optional[DataFrame]]:
+    """One round of candidate discovery → (mapping(other → main),
+    joined-cache handle). Unpersist the handle once the mapping's
+    consumers are done; it is None when no candidate group exists.
 
     Returns an empty mapping DataFrame when no merges remain.
 
@@ -223,28 +170,16 @@ def _find_node_mapping(
     """
     mergeable = edges.filter(~F.col("label").isin(IS_A, RELATES_TO))
     # direction "t": shared (source, key) → candidate targets
-    # direction "s": shared (target, key) → candidate sources.
-    # The anchor filter is applied per-direction BEFORE the union/distinct:
-    # the membership distinct over the full edge table is the dominant cost
-    # of discovery, so the restriction must reach the scan, not prune after.
-    t_edges = mergeable
-    s_edges = mergeable
-    if anchor_filter is not None:
-        t_edges = mergeable.join(
-            anchor_filter.withColumnRenamed("anchor", "src"), "src", "left_semi"
-        )
-        s_edges = mergeable.join(
-            anchor_filter.withColumnRenamed("anchor", "dst"), "dst", "left_semi"
-        )
+    # direction "s": shared (target, key) → candidate sources
     cand = (
-        t_edges.select(
+        mergeable.select(
             F.lit("t").alias("direction"),
             F.col("src").alias("anchor"),
             F.col("edge_key"),
             F.col("dst").alias("cand"),
         )
         .unionByName(
-            s_edges.select(
+            mergeable.select(
                 F.lit("s").alias("direction"),
                 F.col("dst").alias("anchor"),
                 F.col("edge_key"),
@@ -253,20 +188,6 @@ def _find_node_mapping(
         )
         .distinct()
     )
-    import os as _os
-
-    if _os.environ.get("OPENIE_MERGE_DEBUG"):
-        # volume diagnostic (debug only — costs one extra job): how many
-        # membership rows this round's discovery actually scans; the
-        # incremental filter's scale win is THIS collapsing, even where
-        # sandbox walls are stage-barrier-bound
-        import sys as _sys
-
-        print(
-            f"discovery memberships: {cand.count()}"
-            f" (anchors {'restricted' if anchor_filter is not None else 'full'})",
-            file=_sys.stderr,
-        )
 
     # cluster gate: anchor and candidate share a cluster (relations.py:605-607)
     anchor_c = nodes.select(
@@ -299,8 +220,7 @@ def _find_node_mapping(
 
     if grouped.isEmpty():
         grouped.unpersist()
-        empty = _empty_mapping(nodes)
-        return empty, empty.select(F.col("other").alias("lemma_key")), None
+        return _empty_mapping(nodes), None
 
     # pairwise exclusions: an edge between the pair (either direction) or a
     # shared source sentence discards BOTH members (relations.py:627-637).
@@ -336,9 +256,7 @@ def _find_node_mapping(
     # exclusion inputs only matter for pair MEMBERS (they are consumed via
     # semi-joins keyed on the pairs' (c1, c2)) — restrict both global
     # tables to the member set before the expensive distinct / explode-
-    # self-join. Unconditional: a pure-win restriction for round 1 too,
-    # and it is what makes the incremental rounds cheap (members collapse
-    # to the affected neighborhoods).
+    # self-join.
     members = grouped.select(F.col("cand").alias("_mk")).distinct()
 
     edge_pairs = (
@@ -409,25 +327,15 @@ def _find_node_mapping(
         cosine_distance_col(F.col("main_vector"), F.col("other_vector"))
         <= cfg.cosine_threshold
     ).cache()
-    # cached: joined feeds BOTH the mapping and the touched set (and the
-    # fixpoint's several consumers of the mapping) — without the cache each
-    # consumer re-runs the whole discovery (measured: +23s/round at 1M
-    # nodes when the touched materialization re-derived it). It is tiny
-    # (one slim row per cosine-passing candidate). The fixpoint unpersists
-    # it at the end of the round via the returned handle.
+    # cached: joined feeds the mapping and its absorbed-main self-join, and
+    # the fixpoint consumes the mapping several times. It is tiny (one slim
+    # row per cosine-passing candidate). The caller unpersists it via the
+    # returned handle once the round's consumers are done.
 
     # conflict resolution across groups: one main per other (highest-priority
     # main wins); a main absorbed elsewhere defers to the next round
     w_other = Window.partitionBy("other").orderBy(
         F.desc("main_weight"), F.desc("main")
-    )
-    # touched BEFORE conflict resolution: deferred entries (dropped below)
-    # must re-enter next round's affected set or they would never be
-    # re-proposed under incremental discovery
-    touched = (
-        joined.select(F.col("other").alias("lemma_key"))
-        .unionByName(joined.select(F.col("main").alias("lemma_key")))
-        .distinct()
     )
     mapping = (
         joined.withColumn("r", F.row_number().over(w_other))
@@ -440,7 +348,7 @@ def _find_node_mapping(
         absorbed, mapping.main == absorbed.k, "left_anti"
     ).select("other", "main")
     grouped.unpersist()
-    return mapping, touched, joined
+    return mapping, joined
 
 
 def _empty_mapping(nodes: DataFrame) -> DataFrame:
@@ -771,28 +679,11 @@ def merge_fixpoint(
     if local_threshold is None:
         local_threshold = LOCAL_FIXPOINT_THRESHOLD
     spark = nodes.sparkSession
-    round_parts = cfg.round_shuffle_partitions
-    n_count = e_count = None
-    if local_threshold > 0:
-        n_count = nodes.count()
-        e_count = edges.count()
-        if n_count + e_count <= local_threshold:
-            return _merge_fixpoint_via_driver(nodes, edges, cfg)
-    if round_parts is None:
-        # auto policy needs the graph size; on the forced-distributed path
-        # (local_threshold=0) count once — two cheap jobs over the usually
-        # checkpointed aggregated graph buying the measured 15-25%
-        # round-partition win (76.4s vs 103.6s at 1M rows / 32 cores,
-        # BENCH/shuffle_parts_ab.json + 3-way leg). round_shuffle_
-        # partitions=0 disables the policy (session conf untouched).
-        if n_count is None:
-            n_count = nodes.count()
-            e_count = edges.count()
-        round_parts = suggest_round_shuffle_partitions(
-            spark, n_count + e_count
-        )
-    elif round_parts == 0:
-        round_parts = None
+    n_count = nodes.count()
+    e_count = edges.count()
+    if local_threshold > 0 and n_count + e_count <= local_threshold:
+        return _merge_fixpoint_via_driver(nodes, edges, cfg)
+    round_parts = suggest_round_partitions(spark, n_count + e_count)
     seq = iter(range(10_000))
     run_dir = None
     if cfg.checkpoint_dir is not None:
@@ -813,48 +704,28 @@ def merge_fixpoint(
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    debug = bool(_os.environ.get("OPENIE_MERGE_DEBUG"))
     # Scope the round-sized shuffle-partition count to this convergence:
     # every round's shuffles run while the conf is set (ckpt materializes
     # each round eagerly, and the finals below are parquet/checkpoint-
     # materialized before restore, so nothing lazy escapes the scope).
     # scoped_shuffle_partitions makes the set/restore pair race-safe under
     # concurrent fixpoints (refcounted baseline restore — see its docstring
-    # for the residual shared-value hazard and the opt-out).
+    # for the residual shared-value hazard).
     with scoped_shuffle_partitions(spark, round_parts):
-        return _merge_fixpoint_rounds(
-            spark, nodes, edges, cfg, ckpt, run_dir, debug, _sys, _time
-        )
+        return _merge_fixpoint_rounds(spark, nodes, edges, cfg, ckpt, run_dir)
 
 
-def _merge_fixpoint_rounds(
-    spark, nodes, edges, cfg, ckpt, run_dir, debug, _sys, _time
-):
+def _merge_fixpoint_rounds(spark, nodes, edges, cfg, ckpt, run_dir):
     rounds = 0
     nodes = ckpt(nodes, "nodes_init")
     edges = ckpt(edges, "edges_init")
-    anchor_filter = None  # round 1 is always FULL discovery
     while rounds < cfg.max_rounds:
         rounds += 1
         progressed = False
-        _t0 = _time.monotonic()
 
-        mapping, touched, joined_cache = _find_node_mapping(
-            nodes, edges, cfg, anchor_filter=anchor_filter
-        )
+        mapping, joined_cache = find_node_mapping(nodes, edges, cfg)
         mapping = mapping.cache()
-        had_mapping = not mapping.isEmpty()
-        _t_map = _time.monotonic()
-        affected = None
-        if had_mapping:
-            if cfg.incremental_discovery:
-                # materialize the pre-conflict candidate set BEFORE apply
-                # (its lineage reads the pre-apply tables)
-                affected = ckpt(touched, "affected")
+        if not mapping.isEmpty():
             nodes, edges = apply_node_mapping(nodes, edges, mapping, cfg)
             nodes = ckpt(nodes, "nodes")
             edges = ckpt(edges, "edges")
@@ -862,7 +733,6 @@ def _merge_fixpoint_rounds(
         mapping.unpersist()
         if joined_cache is not None:
             joined_cache.unpersist()
-        _t_apply = _time.monotonic()
 
         # Skip probe (r5): a round with no (src, dst) candidate pairs
         # cannot change the edge table (_edge_merge_cand_pairs is a sound
@@ -875,8 +745,6 @@ def _merge_fixpoint_rounds(
         # exclusion evaluator. The cached agg is REUSED by
         # merge_parallel_edges below, so candidate-bearing rounds pay it
         # once, not twice.
-        edge_changed = False
-        changed_eps = None
         cand_pairs = _edge_merge_cand_pairs(edges).cache()
         if not cand_pairs.isEmpty():
             # Fuse the changed-detection into the checkpoint action itself
@@ -887,65 +755,17 @@ def _merge_fixpoint_rounds(
             from pyspark.sql import Observation
 
             obs = Observation(f"edges_par_r{rounds}")
-            new_edges = ckpt(
+            edges = ckpt(
                 merge_parallel_edges(edges, cand_pairs=cand_pairs).observe(
                     obs, F.sum("changed").alias("n_changed")
                 ),
                 "edges_par",
-            )
-            edge_changed = bool(obs.get["n_changed"] or 0)
-            if edge_changed and cfg.incremental_discovery:
-                ch = new_edges.filter(F.col("changed") == 1)
-                changed_eps = (
-                    ch.select(F.col("src").alias("lemma_key"))
-                    .unionByName(ch.select(F.col("dst").alias("lemma_key")))
-                    .distinct()
-                )
-            edges = new_edges.drop("changed")
+            ).drop("changed")
+            if obs.get["n_changed"]:
+                progressed = True
         # safe to release: the edges_par checkpoint is eager, so nothing
         # downstream re-reads the cached candidate agg
         cand_pairs.unpersist()
-        if edge_changed:
-            progressed = True
-
-        if cfg.incremental_discovery and progressed:
-            # next round's anchors: every node the round changed (applied
-            # AND conflict-deferred candidates, parallel-merged edge
-            # endpoints) plus its one-hop neighborhood in the post-round
-            # edge table — the only places a group outcome can differ
-            aff = affected
-            if changed_eps is not None:
-                aff = changed_eps if aff is None else aff.unionByName(changed_eps)
-            aff = aff.distinct()
-            e2 = edges.select("src", "dst")
-            nb = (
-                e2.join(
-                    aff.withColumnRenamed("lemma_key", "src"), "src", "left_semi"
-                )
-                .select(F.col("dst").alias("lemma_key"))
-                .unionByName(
-                    e2.join(
-                        aff.withColumnRenamed("lemma_key", "dst"),
-                        "dst",
-                        "left_semi",
-                    ).select(F.col("src").alias("lemma_key"))
-                )
-            )
-            anchor_filter = ckpt(
-                aff.unionByName(nb).distinct().select(
-                    F.col("lemma_key").alias("anchor")
-                ),
-                "anchors",
-            )
-        if debug:
-            print(
-                f"merge round {rounds}: find={_t_map - _t0:.1f}s "
-                f"apply={_t_apply - _t_map:.1f}s "
-                f"edge_par={_time.monotonic() - _t_apply:.1f}s "
-                f"mapping={'y' if had_mapping else 'n'} "
-                f"edge_changed={'y' if edge_changed else 'n'}",
-                file=_sys.stderr,
-            )
 
         if not progressed:
             break
@@ -960,8 +780,11 @@ def _merge_fixpoint_rounds(
 
         quiescent = False
         if rounds > 0:
-            probe_map = find_node_mapping(nodes, edges, cfg)
-            if probe_map.isEmpty():
+            probe_map, probe_joined = find_node_mapping(nodes, edges, cfg)
+            no_mapping = probe_map.isEmpty()
+            if probe_joined is not None:
+                probe_joined.unpersist()
+            if no_mapping:
                 probe_cand = _edge_merge_cand_pairs(edges).cache()
                 if probe_cand.isEmpty():
                     quiescent = True  # no candidates → no possible change

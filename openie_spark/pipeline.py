@@ -58,12 +58,6 @@ class PipelineConfig:
     # distributed DataFrame rounds (identical semantics, A/B-tested). Not in
     # fingerprint(): the two paths produce identical output by contract.
     merge_local_threshold: Optional[int] = None
-    # Threads to MergeConfig.incremental_discovery (see merge.py) — output-
-    # identical A/B lever; not in fingerprint() for the same reason as
-    # merge_local_threshold. Default OFF per the measured A/B (BENCH/
-    # incremental_discovery_ab.json: ~5% slower at both 1M-node and
-    # 384k-page scales).
-    incremental_discovery: bool = False
     # Fuse clean→parse→extract into one mapInPandas (one JVM↔Python
     # crossing instead of three). Only takes effect WITHOUT a work_dir —
     # checkpointed runs materialize the parse stage for resume, which is
@@ -219,9 +213,7 @@ def run_pipeline(
     if not cfg.skip_merge:
         mcfg = MergeConfig(
             strict_parity=cfg.strict_parity,
-            n_salts=cfg.n_salts,
             dim=cfg.dim,
-            incremental_discovery=cfg.incremental_discovery,
             # with a work_dir, fixpoint rounds checkpoint durably (parquet
             # stage tables) instead of executor-block localCheckpoint
             checkpoint_dir=(f"{cfg.work_dir}/merge_ckpt" if cfg.work_dir else None),

@@ -224,10 +224,10 @@ def bypass_and_drop(
     # iterative stages grind the removed-adjacency set, whose size the rr
     # checkpoint just observed for free; the final aggregation runs after
     # the conf is restored (race-safe scope — see scoped_shuffle_partitions).
-    from .merge import scoped_shuffle_partitions, suggest_round_shuffle_partitions
+    from .merge import scoped_shuffle_partitions, suggest_round_partitions
 
     n_rr = int(_obs_rr.get["n"])
-    _round_parts = suggest_round_shuffle_partitions(spark, n_rr)
+    _round_parts = suggest_round_partitions(spark, n_rr)
 
     with scoped_shuffle_partitions(spark, _round_parts):
         return _bypass_rounds(
@@ -383,11 +383,6 @@ def _bypass_rounds(
             ),
         )
 
-    import os as _os
-    import time as _time
-
-    debug = bool(_os.environ.get("OPENIE_BYPASS_DEBUG"))
-
     def one_round(cur: DataFrame) -> DataFrame:
         """ONE bypass round as a LAZY plan: input rows in edge_cols (rows
         already kept→kept are inert — their endpoints never land in
@@ -507,24 +502,14 @@ def _bypass_rounds(
 
     rounds = 0
     truncated = False
-    # Round pairing (r7, VERDICT r6 item 7 — MEASURED AND REJECTED as the
-    # default): OPENIE_BYPASS_ROUNDS_PER_CKPT>1 chains that many rounds
-    # LAZILY per localCheckpoint, one job barrier per group instead of per
-    # round. Semantics are exactly the sequential rounds' (each round's
-    # groupBy still precedes the next round's pairing in the plan;
-    # max_rounds stays an exact bound). But it LOSES in practice: round
-    # B's plan references round A's subtree ~6× (removed/adj/b_in/b_out/
-    # untouched), and only the exchanges are reused — the post-shuffle
-    # aggregation and join stages re-execute per consumer, ~3× the work
-    # per pair (measured: the 5 bypass pytest cases 159s sequential vs
-    # >430s paired; 1M-node A/B in BENCH/bypass_pair_ab.json). The barrier
-    # saving the pairing chases was captured instead inside _reach (two
-    # BFS levels per checkpoint, fan-out 2 — that one measures FASTER).
-    # The lever stays for re-measurement on a real cluster where
-    # scheduler-barrier cost could dominate recompute.
-    rounds_per_ckpt = max(
-        1, int(_os.environ.get("OPENIE_BYPASS_ROUNDS_PER_CKPT", "1"))
-    )
+    # One round per localCheckpoint. Chaining several rounds lazily per
+    # checkpoint (one job barrier per group) was measured and rejected: a
+    # round's plan references the previous round's subtree ~6× and only
+    # the exchanges are reused, so the post-shuffle stages re-execute per
+    # consumer (the 5 bypass pytest cases 159s sequential vs >430s paired;
+    # 1M-node A/B in BENCH/bypass_pair_ab.json). The barrier saving is
+    # taken inside _reach instead (two BFS levels per checkpoint).
+    #
     # in-play row count carried across checkpoints: observed for free on
     # each checkpoint (r5 next-round item 2 — every in-play row touches
     # a removed node and vice versa, so in_play == 0 ⟺ removed is empty),
@@ -534,7 +519,6 @@ def _bypass_rounds(
     from pyspark.sql import Observation
 
     while rounds < max_rounds:
-        _t0 = _time.monotonic()
         if in_play_known == 0:
             break
         if in_play_known is None:
@@ -546,13 +530,9 @@ def _bypass_rounds(
             )
             if removed_probe.isEmpty():
                 break
-        n_sub = min(rounds_per_ckpt, max_rounds - rounds)
-        plan = cur_edges
-        for _ in range(n_sub):
-            rounds += 1
-            plan = one_round(plan.select(edge_cols))
+        rounds += 1
         obs = Observation(f"bypass_r{rounds}")
-        merged = plan.observe(
+        merged = one_round(cur_edges).observe(
             obs,
             F.sum((~(src_kept & dst_kept)).cast("long")).alias("in_play"),
         ).localCheckpoint(eager=True)
@@ -561,14 +541,6 @@ def _bypass_rounds(
         )
         cur_edges = merged.filter(~(src_kept & dst_kept)).select(edge_cols)
         in_play_known = int(obs.get["in_play"] or 0)
-        if debug:
-            import sys as _sys
-
-            print(
-                f"bypass rounds {rounds - n_sub + 1}-{rounds}: "
-                f"{_time.monotonic() - _t0:.1f}s in_play={in_play_known}",
-                file=_sys.stderr,
-            )
 
     if in_play_known != 0 and rounds >= max_rounds:
         # max_rounds exhausted: never return edges referencing nodes absent

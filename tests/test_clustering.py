@@ -42,6 +42,18 @@ def test_cluster_too_few_sentences_all_zero(spark):
     assert {r["cluster"] for r in labels} == {0}
 
 
+def test_cluster_zero_vectors_all_zero(spark):
+    """Identical (all-zero) vectors give KMeans one non-empty cluster, so
+    no silhouette exists; every such fit is skipped like k < 2."""
+    rows = [(f"u{i}", 0, [0.0] * 8) for i in range(120)]  # k = 2 for 50, 60
+    sent_df = spark.createDataFrame(
+        rows, "url string, sent_id int, sent_vec array<float>"
+    )
+    labels = cluster_sentences(sent_df, seed=7).collect()
+    assert len(labels) == 120
+    assert {r["cluster"] for r in labels} == {0}
+
+
 def test_with_clusters_join(spark):
     sent_df = make_sent_df(spark, n_per_blob=5)
     clusters = sent_df.select("url", "sent_id").withColumn("cluster", F.lit(3))

@@ -418,18 +418,43 @@ def test_bypass_max_rounds_truncation_never_dangles(spark):
         assert r["src"] in kept and r["dst"] in kept
 
 
+def _chain_corpus_graph(spark):
+    """Aggregated graph of the confluent merge-fixture corpus (the
+    kg_merge_fixpoint oracle's input): its chain groups only become
+    discoverable after the first round's merges."""
+    from openie_spark.corpus import merge_fixture_pages_df
+    from openie_spark.extract import extract_triples_df, ok_triples
+    from openie_spark.parse import parse_pages
+    from openie_spark.textclean import clean_pages
+
+    triples = ok_triples(
+        extract_triples_df(
+            parse_pages(clean_pages(merge_fixture_pages_df(spark, 24), lang="ru")),
+            frozenset(),
+            with_vectors=True,
+        )
+    ).withColumn("cluster", F.lit(0))
+    return aggregate_nodes(triples, dim=64), aggregate_edges(triples)
+
+
 def test_distributed_fixpoint_equals_local(spark):
     """The DataFrame fixpoint (scale path) and the driver-local fast path
-    must produce identical graphs on the same input."""
-    for rows in (MERGE_POSITIVE, EDGE_MERGE, CLUSTER_GATE):
-        nodes, edges = _agg(spark, rows)
-        ln, le, _ = merge_fixpoint(nodes, edges, MergeConfig())  # local path
-        dn, de, _ = merge_fixpoint(
-            nodes, edges, MergeConfig(), local_threshold=0
+    must produce identical graphs on the same input — including the chain
+    corpus, whose round-2 groups the distributed rounds must find."""
+
+    def both_paths(nodes, edges, cfg):
+        ln, le, _ = merge_fixpoint(nodes, edges, cfg)  # local path
+        dn, de, rounds = merge_fixpoint(
+            nodes, edges, cfg, local_threshold=0
         )  # distributed path
-        ls = our_snapshot(ln, le)
-        ds = our_snapshot(dn, de)
-        assert ls == ds
+        assert our_snapshot(ln, le) == our_snapshot(dn, de)
+        return rounds
+
+    for rows in (MERGE_POSITIVE, EDGE_MERGE, CLUSTER_GATE):
+        both_paths(*_agg(spark, rows), MergeConfig())
+    nodes, edges = _chain_corpus_graph(spark)
+    rounds = both_paths(nodes, edges, MergeConfig(strict_parity=True))
+    assert rounds >= 2  # the chain groups force a second round
 
 
 def test_distributed_fixpoint_reliable_checkpoint(spark, tmp_path):
@@ -701,104 +726,39 @@ def test_distributed_fixpoint_equals_local_randomized(spark):
         assert our_snapshot(ln, le) == our_snapshot(dn, de), f"case {case}"
 
 
-def test_incremental_discovery_equals_full(spark):
-    """MergeConfig.incremental_discovery (r5) must be output-IDENTICAL to
-    full per-round discovery: rounds ≥ 2 only restrict anchors to the
-    changed neighborhoods, and the soundness argument (docstring on the
-    config field) says no group outside the filter can change outcome.
-    A/B on the small fixtures AND on the confluent merge-fixture corpus,
-    whose chain groups only become discoverable in round 2 — i.e. the
-    round-2 merges MUST be found through the anchor filter."""
-    from openie_spark.corpus import merge_fixture_pages_df
-    from openie_spark.pipeline import PipelineConfig, run_pipeline
-
-    for rows in (MERGE_POSITIVE, EDGE_MERGE, CLUSTER_GATE):
-        nodes, edges = _agg(spark, rows)
-        inc = merge_fixpoint(
-            nodes, edges, MergeConfig(incremental_discovery=True),
-            local_threshold=0,
-        )
-        full = merge_fixpoint(
-            nodes, edges, MergeConfig(incremental_discovery=False),
-            local_threshold=0,
-        )
-        assert our_snapshot(inc[0], inc[1]) == our_snapshot(full[0], full[1])
-
-    # chain corpus end-to-end (same path as the kg_merge_fixpoint oracle)
-    pages = merge_fixture_pages_df(spark, 24)
-    snaps = []
-    for flag in (True, False):
-        from openie_spark.graph import aggregate_edges, aggregate_nodes
-        from openie_spark.extract import extract_triples_df, ok_triples
-        from openie_spark.parse import parse_pages
-        from openie_spark.textclean import clean_pages
-        from pyspark.sql import functions as F
-
-        triples = ok_triples(
-            extract_triples_df(
-                parse_pages(clean_pages(pages, lang="ru")),
-                frozenset(),
-                with_vectors=True,
-            )
-        ).withColumn("cluster", F.lit(0))
-        n = aggregate_nodes(triples, dim=64)
-        e = aggregate_edges(triples)
-        mn, me, rounds = merge_fixpoint(
-            n, e,
-            MergeConfig(strict_parity=True, incremental_discovery=flag),
-            local_threshold=0,
-        )
-        assert rounds >= 2  # the chain groups force a second round
-        snaps.append(our_snapshot(mn, me))
-    assert snaps[0] == snaps[1]
-
-
-def test_fixpoint_round_shuffle_partitions_scoped(spark):
-    """The r6 data-scaled round-partition policy (VERDICT r5 item 5) must
-    (a) apply an explicit round_shuffle_partitions during the distributed
-    rounds, (b) restore the session conf afterwards — even when the
-    fixpoint raises — and (c) not change results (exactness is pinned by
-    the scale tools' closed-form check and the fixture oracles; here we
-    assert the small-graph outcome matches the default-config run)."""
-    from openie_spark.merge import suggest_round_shuffle_partitions
+def test_fixpoint_round_partitions_scoped(spark):
+    """The data-scaled round-partition policy must (a) not change results,
+    (b) restore the session conf after the distributed rounds — even when
+    the fixpoint raises — and (c) floor, cap and scale as documented."""
+    from openie_spark.merge import suggest_round_partitions
 
     nodes, edges = _agg(spark, MERGE_POSITIVE)
     prior = spark.conf.get("spark.sql.shuffle.partitions")
+    # a session value the policy never picks for this tiny graph (it
+    # floors at 8), so a missed restore shows
+    spark.conf.set("spark.sql.shuffle.partitions", "13")
+    try:
+        local_n, _, _ = merge_fixpoint(nodes, edges, MergeConfig())
+        want = {r["lemma_key"] for r in local_n.select("lemma_key").collect()}
 
-    base_n, base_e, _ = merge_fixpoint(
-        nodes, edges, MergeConfig(), local_threshold=0
-    )
-    base = {r["lemma_key"] for r in base_n.select("lemma_key").collect()}
+        mn, _, _ = merge_fixpoint(nodes, edges, MergeConfig(), local_threshold=0)
+        got = {r["lemma_key"] for r in mn.select("lemma_key").collect()}
+        assert got == want
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
 
-    mn, me, _ = merge_fixpoint(
-        nodes,
-        edges,
-        MergeConfig(round_shuffle_partitions=4),
-        local_threshold=0,
-    )
-    got = {r["lemma_key"] for r in mn.select("lemma_key").collect()}
-    assert got == base
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prior
+        # restore-on-raise: a bad column upstream fails inside the scope
+        with pytest.raises(Exception):
+            merge_fixpoint(nodes.drop("weight"), edges, MergeConfig(), local_threshold=0)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
 
     # auto policy floors at 8 and caps at 2x parallelism
-    assert suggest_round_shuffle_partitions(spark, 10) == 8
+    assert suggest_round_partitions(spark, 10) == 8
     two_cores = 2 * spark.sparkContext.defaultParallelism
     assert (
-        suggest_round_shuffle_partitions(spark, 10**12) == two_cores
+        suggest_round_partitions(spark, 10**12) == two_cores
     )
-    assert suggest_round_shuffle_partitions(spark, 4_000_000) == min(
+    assert suggest_round_partitions(spark, 4_000_000) == min(
         16, two_cores
     )
-
-    # restore-on-raise: max_rounds=0 exhausts immediately (returns, no
-    # raise) — force a raise instead via a bad column upstream
-    import pytest
-
-    with pytest.raises(Exception):
-        merge_fixpoint(
-            nodes.drop("weight"),
-            edges,
-            MergeConfig(round_shuffle_partitions=4),
-            local_threshold=0,
-        )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prior

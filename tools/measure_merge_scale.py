@@ -11,13 +11,10 @@ of. Expected merges are closed-form (simple groups 1, chains 2), so the
 run double-checks its own correctness:
 final_nodes == initial_nodes - n_simple - 2*n_chain.
 
-Records total wall, rounds, per-round wall (from merge_fixpoint debug
-timings on stderr), and optionally the durable-checkpoint variant
-(--ckpt DIR). Results go to SCALE.md §8.
+Records total wall and rounds, and optionally the durable-checkpoint
+variant (--ckpt DIR). Results go to SCALE.md §8.
 
 Run: python tools/measure_merge_scale.py [n_groups] [n_noise_edges] [--ckpt DIR]
-     [--incremental]   # A/B lever; default is full discovery (the
-                       # production default since r5)
 """
 
 from __future__ import annotations
@@ -119,25 +116,7 @@ def main() -> None:
     print(f"graph built: {n_nodes} nodes, {n_edges} edges "
           f"({n_simple} simple + {n_chain} chain groups)", file=sys.stderr)
 
-    from openie_spark.merge import suggest_round_shuffle_partitions
-
-    cfg = MergeConfig(
-        dim=8,
-        checkpoint_dir=ckpt_dir,
-        # pass the known graph size through the r6 data-scaled
-        # round-partition policy; --no-round-parts DISABLES it (0) so A/B
-        # legs can pin the session conf as the axis
-        round_shuffle_partitions=(
-            0
-            if "--no-round-parts" in sys.argv
-            else suggest_round_shuffle_partitions(spark, n_nodes + n_edges)
-        ),
-        # Default FULL discovery — the production default since the r5 A/B
-        # (MergeConfig.incremental_discovery=False). --incremental opts
-        # into the A/B lever; --full-discovery is accepted as a no-op for
-        # older harness invocations.
-        incremental_discovery="--incremental" in sys.argv,
-    )
+    cfg = MergeConfig(dim=8, checkpoint_dir=ckpt_dir)
     # optional CPU accounting over the measured span: process-TREE jiffies
     # (JVM + Python workers; immune to unrelated VM activity) — lets the
     # N-vs-4N harness separate engine parallel overhead (extra jiffies per
@@ -169,7 +148,6 @@ def main() -> None:
         "merges_correct": ok,
         "final_edges": n_final_edges,
         "checkpoint": "parquet" if ckpt_dir else "localCheckpoint",
-        "incremental_discovery": cfg.incremental_discovery,
     }
     print(json.dumps(out))
     spark.stop()

@@ -92,17 +92,10 @@ def main() -> None:
     ap.add_argument("--cores-n", type=int, default=2)
     ap.add_argument("--cooldown", type=int, default=45)
     ap.add_argument("--out", default="BENCH/merge_topk_scaling.json")
-    # The merge child defaults to full discovery (the production default
-    # since r5); --incremental forwards the A/B lever. --full-discovery is
-    # accepted as a no-op for older invocations.
-    ap.add_argument("--incremental", action="store_true")
-    ap.add_argument("--full-discovery", action="store_true")
     args = ap.parse_args()
 
     n, n4 = args.cores_n, args.cores_n * 4
     merge_args = [str(args.groups), str(args.noise_edges)]
-    if args.incremental:
-        merge_args.append("--incremental")
     topk_args = [str(args.topk_nodes), str(args.topk_edges)]
 
     results = {"merge": [], "topk": []}

@@ -6,11 +6,7 @@ exactly as a production batch would run. Records total wall + the final
 graph shape; the final (nodes, edges) counts double as a determinism
 check against BENCH/capstone_384k_cold.json (10,000 / 485,054).
 
-Usage: python tools/run_capstone.py [n_pages] [--incremental]
-       [--out BENCH/capstone.json]
-Default is full discovery (the production default since the r5 A/B);
---incremental opts into the A/B lever. --full-discovery is accepted as a
-no-op for older invocations.
+Usage: python tools/run_capstone.py [n_pages] [--out BENCH/capstone.json]
 """
 
 from __future__ import annotations
@@ -29,7 +25,6 @@ sys.path.insert(0, str(REPO))
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     n_pages = int(args[0]) if args else 384_000
-    incremental = "--incremental" in sys.argv
     out_path = "BENCH/capstone.json"
     if "--out" in sys.argv:
         out_path = sys.argv[sys.argv.index("--out") + 1]
@@ -51,7 +46,6 @@ def main() -> None:
             entities_limit=10_000,
             skip_clustering=True,
             merge_local_threshold=0,
-            incremental_discovery=incremental,
         )
         t0 = time.monotonic()
         out = run_pipeline(spark, pages, cfg, input_fingerprint=f"cap:{n_pages}")
@@ -69,7 +63,6 @@ def main() -> None:
             "wall_total_s": round(wall, 1),
             "pages_per_sec_e2e": round(n_pages / wall, 1),
             "triples_per_sec_e2e": round(n_triples / wall, 1),
-            "incremental_discovery": incremental,
         }
         print(json.dumps(result))
         (REPO / out_path).write_text(json.dumps(result, indent=1))
