@@ -196,11 +196,10 @@ def main() -> None:
     bench("kg_graph", lambda: force(with_degrees(nodes, edges)), cooldown=30)
 
     # The production no-work_dir path since r4 is the FUSED
-    # clean→parse→extract (PipelineConfig.fuse_extract=True, one
-    # mapInPandas crossing — measured 1.9× the unfused stages, BENCH/
-    # fuse_ab.json). Timed as its own query; the unfused per-stage numbers
-    # above remain for stage-level diagnosis and round-over-round
-    # comparability.
+    # clean→parse→extract (one mapInPandas crossing — measured 1.9× the
+    # unfused stages, BENCH/fuse_ab.json). Timed as its own query; the
+    # unfused per-stage numbers above remain for stage-level diagnosis and
+    # round-over-round comparability.
     from openie_spark.extract import extract_triples_from_pages
 
     fused = ok_triples(

@@ -170,7 +170,7 @@ def child(cores: int, pages: int, pages_parquet: str | None = None) -> None:
     stat0 = _proc_stat()
     tree0 = _tree_jiffies()
     t0 = time.monotonic()
-    # The pipeline's fused fast path (PipelineConfig.fuse_extract): one
+    # The pipeline's fused fast path (run_pipeline without a work_dir): one
     # mapInPandas for clean→parse→extract — identity-tested vs the unfused
     # stages, measured 28% faster at 4 cores (one Arrow crossing, not 3).
     # No embedding model exists in this sandbox → vectors would be all-zero

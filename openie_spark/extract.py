@@ -201,8 +201,8 @@ def extract_triples_from_pages(
     (identity-tested in tests/test_extract_spark.py), but the page text and
     the token structs never cross the JVM↔Python boundary twice — three
     Arrow serialization round trips become one. This is the pipeline's fast
-    path when no parse-stage checkpoint is requested
-    (``PipelineConfig.fuse_extract``); with a work_dir the unfused stages
+    path when no parse-stage checkpoint is requested (``run_pipeline``
+    without a ``work_dir``); with a work_dir the unfused stages
     materialize parses for resume, which is worth the extra crossings.
 
     The lang filter stays JVM-side before the projection so it pushes into

@@ -45,9 +45,7 @@ class PipelineConfig:
     entities_limit: Optional[int] = 10000  # reference default, instance/config.json:5
     dim: int = 64
     seed: int = 42
-    salted: bool = True        # node aggregation (Zipfian lemma keys)
-    salt_edges: bool = False   # edge keys are ~unique per occurrence
-    n_salts: int = 8
+    n_salts: int = 8  # node aggregation salts (Zipfian lemma keys)
     strict_parity: bool = False
     skip_clustering: bool = False  # sandbox corpora are usually < MIN_CLUSTER_SIZE·2
     skip_merge: bool = False
@@ -58,14 +56,6 @@ class PipelineConfig:
     # distributed DataFrame rounds (identical semantics, A/B-tested). Not in
     # fingerprint(): the two paths produce identical output by contract.
     merge_local_threshold: Optional[int] = None
-    # Fuse clean→parse→extract into one mapInPandas (one JVM↔Python
-    # crossing instead of three). Only takes effect WITHOUT a work_dir —
-    # checkpointed runs materialize the parse stage for resume, which is
-    # worth the extra crossings. Output is identity-tested vs the unfused
-    # stages. ON by default since r4: measured 1.9× faster at sf0.1
-    # (median 0.52s vs 0.99s over 5 interleaved reps, tools/bench_fuse.py);
-    # set False to keep per-stage lineage for debugging.
-    fuse_extract: bool = True
 
     @classmethod
     def for_scale(cls, work_dir: Optional[str] = None, **overrides) -> "PipelineConfig":
@@ -116,7 +106,7 @@ class PipelineConfig:
         return (
             f"lang={self.lang};stop={stop_digest};add={self.additional_relations};"
             f"limit={self.entities_limit};dim={self.dim};seed={self.seed};"
-            f"salted={self.salted};strict={self.strict_parity};"
+            f"strict={self.strict_parity};"
             f"skip_c={self.skip_clustering};skip_m={self.skip_merge};"
             f"maxd={self.max_descriptions}"
         )
@@ -149,7 +139,12 @@ def run_pipeline(
     parses = stage("parses", lambda: parse_pages(cleaned, page_parser))
     out["parses"] = parses
 
-    if cfg.fuse_extract and ledger is None:
+    # Without a work_dir, clean→parse→extract run fused in one mapInPandas
+    # (one JVM↔Python crossing instead of three; identity-tested against
+    # the unfused stages, measured 1.9× faster at sf0.1 by
+    # tools/bench_fuse.py). A work_dir materializes the parse stage for
+    # resume, which is worth the extra crossings.
+    if ledger is None:
         from .extract import extract_triples_from_pages
 
         triples_all = extract_triples_from_pages(
@@ -195,7 +190,7 @@ def run_pipeline(
         lambda: aggregate_nodes(
             labeled,
             n_salts=cfg.n_salts,
-            salted=cfg.salted,
+            salted=True,
             max_descriptions=cfg.max_descriptions,
             dim=cfg.dim,
         ),
@@ -205,7 +200,7 @@ def run_pipeline(
         lambda: aggregate_edges(
             labeled,
             n_salts=cfg.n_salts,
-            salted=cfg.salt_edges,
+            salted=False,  # edge keys are ~unique per occurrence
             max_descriptions=cfg.max_descriptions,
         ),
     )

@@ -11,10 +11,16 @@ Modes:
 - ``stream_triples`` + ``start_triples_sink``: fully streaming
   clean→parse→extract appended to the triples stage table (the
   checkpoint boundary).
-- ``start_graph_refresh``: per micro-batch, merge the batch's node/edge
-  aggregation deltas into persistent state tables, so the downstream
-  graph follows the stream too; ``read_graph_state`` opens the latest
-  refreshed graph in the batch output shape.
+- ``start_refresh`` with a ``make_*_refresh`` callable: per micro-batch,
+  fold the batch into a versioned state table (graph nodes/edges, dedup
+  index, HLL or count-min registers, first-seen days); the matching
+  ``read_*`` opens the latest complete version and ``gc_state`` drops
+  versions no retry can need.
+
+Each family's state is a set of tables re-derived each epoch from the
+previous version plus the batch's delta (the streams-as-tables view):
+``{state_dir}/v{epoch:08d}/{table}`` for every table of the family, and a
+version counts only once every table carries ``_SUCCESS``.
 
 Watermarking: pages carry ``warc_ts``; a watermark bounds state if a
 windowed aggregate (e.g. triples/minute monitoring) is attached. The
@@ -23,7 +29,7 @@ extraction path itself is stateless, so late data simply flows through.
 
 from __future__ import annotations
 
-from typing import Dict, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -33,6 +39,14 @@ from .corpus import PAGES_SCHEMA_DDL, STOPWORDS_FIXTURE
 from .extract import extract_triples_df, ok_triples
 from .parse import PageParser, parse_pages, template_parse_page
 from .textclean import clean_pages
+
+# The tables of each versioned-state family, in write order.
+GRAPH_STATE_TABLES = ("nodes", "edges")
+DEDUP_STATE_TABLES = ("hashes", "bands", "labels")
+REGISTER_STATE_TABLES = ("registers",)  # HLL and count-min
+FIRSTSEEN_STATE_TABLES = ("first_seen",)
+
+States = Tuple[DataFrame, ...]
 
 
 def read_pages_stream(
@@ -73,6 +87,19 @@ def stream_triples(
     )
 
 
+def _start(writer, checkpoint_dir: str, trigger_seconds: Optional[int]):
+    """Start an append-mode query: every ``trigger_seconds`` when given,
+    else once over everything available now."""
+    writer = writer.option("checkpointLocation", checkpoint_dir).outputMode(
+        "append"
+    )
+    if trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    else:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def start_triples_sink(
     triples_stream: DataFrame,
     out_dir: str,
@@ -82,17 +109,26 @@ def start_triples_sink(
     """Append the streaming triples to the triples stage table. Exactly-once
     via the streaming checkpoint; this IS the pipeline's checkpoint-resume
     boundary in streaming mode."""
-    writer = (
-        triples_stream.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _start(
+        triples_stream.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir,
+        trigger_seconds,
     )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def start_refresh(
+    stream_df: DataFrame,
+    refresh: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    trigger_seconds: Optional[int] = None,
+):
+    """Install a ``make_*_refresh`` callable as the stream's foreachBatch
+    sink."""
+    return _start(
+        stream_df.writeStream.foreachBatch(refresh),
+        checkpoint_dir,
+        trigger_seconds,
+    )
 
 
 def triples_rate_monitor(
@@ -103,12 +139,12 @@ def triples_rate_monitor(
     watermark: str = "2 minutes",
 ) -> DataFrame:
     """Windowed triples-per-warc_ts-window monitor with a watermark bounding
-    state for late pages (the one stateful streaming op the engine ships)."""
-    cleaned = clean_pages(pages_stream, lang=lang)
-    parses = parse_pages(cleaned)
-    triples = ok_triples(
-        extract_triples_df(parses, frozenset(stopwords), with_vectors=False)
-    )
+    state for late pages (the one stateful streaming op the engine ships).
+
+    Append mode only: a window is emitted once, after the watermark passes
+    its end. The triples are joined back to their pages' ``warc_ts``, a
+    stream-stream join, which update mode rejects."""
+    triples = stream_triples(pages_stream, stopwords, lang=lang)
     # re-attach warc_ts (extract keeps only url/sent ids) via the page key
     keyed = pages_stream.select("url", "warc_ts").withWatermark(
         "warc_ts", watermark
@@ -120,121 +156,35 @@ def triples_rate_monitor(
     )
 
 
-def start_graph_refresh(
-    triples_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    dim: int = 64,
-    max_descriptions: Optional[int] = None,
-    trigger_seconds: Optional[int] = None,
-):
-    """Per-micro-batch incremental graph refresh: aggregate each batch of
-    triples into node/edge DELTA state and merge it into the persistent
-    state tables by key — so the downstream graph tables follow the stream
-    instead of stopping at the triples stage.
-
-    The state combine is associative (sums, min-occurrence carries, set
-    unions; vectors kept as element-wise sums — see graph.py node_state_
-    delta), so over any closed input the refreshed graph EQUALS the batch
-    aggregate_nodes/aggregate_edges output regardless of how the stream
-    chopped it into micro-batches (pinned by test_streaming_sinks).
-
-    Storage layout: ``{state_dir}/v{epoch:08d}/{nodes,edges}`` — one
-    immutable version per epoch, named by the foreachBatch epoch_id so a
-    RETRIED epoch overwrites its own directory (idempotent) instead of
-    corrupting the previous state, which the merge is still lazily
-    reading. The old-state lookup is bounded to versions strictly below
-    the current epoch, so a retry whose first attempt already completed
-    both table writes (but died before the streaming checkpoint commit)
-    re-merges against the PRE-epoch state rather than double-counting
-    its own output. Readers open the highest complete version
-    (:func:`read_graph_state`); old versions are retained for exactly-once
-    retry safety — GC them once the streaming checkpoint has advanced.
-
-    Triples without a ``cluster`` column (clustering is a global batch
-    stage) get cluster=0, matching the batch pipeline's skip_clustering
-    labeling.
-    """
-    refresh = make_graph_refresh(
-        state_dir, dim=dim, max_descriptions=max_descriptions
-    )
-
-    writer = (
-        triples_stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+# ---- versioned state ---------------------------------------------------------
 
 
-def make_graph_refresh(
-    state_dir: str,
-    dim: int = 64,
-    max_descriptions: Optional[int] = None,
-):
-    """Build the foreachBatch callable :func:`start_graph_refresh` installs.
-
-    Module-level (not a closure inside the writer setup) so the retry
-    contract is directly testable: calling ``refresh(batch, N)`` twice —
-    the completed-write-but-uncommitted-checkpoint replay — must leave
-    state equal to a single application, because the old-state lookup is
-    bounded to versions strictly below N (never the retried epoch's own
-    v{N} output, which would both double-merge the batch and overwrite a
-    path being lazily read)."""
-    from .graph import (
-        edge_state_delta,
-        merge_edge_state,
-        merge_node_state,
-        node_state_delta,
-    )
-
-    def refresh(batch_df: DataFrame, epoch_id: int) -> None:
-        if "cluster" not in batch_df.columns:
-            batch_df = batch_df.withColumn("cluster", F.lit(0))
-        spark = batch_df.sparkSession
-        delta_n = node_state_delta(
-            batch_df, dim=dim, max_descriptions=max_descriptions
-        )
-        delta_e = edge_state_delta(batch_df, max_descriptions=max_descriptions)
-        cur = _latest_state_version(
-            spark, state_dir, max_version=int(epoch_id) - 1
-        )
-        if cur is not None:
-            old_n = spark.read.parquet(f"{state_dir}/v{cur:08d}/nodes")
-            old_e = spark.read.parquet(f"{state_dir}/v{cur:08d}/edges")
-            new_n = merge_node_state(old_n, delta_n, max_descriptions)
-            new_e = merge_edge_state(old_e, delta_e, max_descriptions)
-        else:
-            new_n, new_e = delta_n, delta_e
-        vdir = f"{state_dir}/v{int(epoch_id):08d}"
-        new_n.write.mode("overwrite").parquet(f"{vdir}/nodes")
-        new_e.write.mode("overwrite").parquet(f"{vdir}/edges")
-
-    return refresh
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path constructor) for ``path`` — Hadoop FS API, so
+    state dirs work on HDFS/S3 paths too."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    return Path(path).getFileSystem(spark._jsc.hadoopConfiguration()), Path
 
 
-def _latest_state_version(
+def _vdir(state_dir: str, version: int) -> str:
+    return f"{state_dir}/v{int(version):08d}"
+
+
+def _complete_versions(
     spark: SparkSession,
     state_dir: str,
+    tables: Tuple[str, ...],
     max_version: Optional[int] = None,
-    tables: Tuple[str, ...] = ("nodes", "edges"),
-) -> Optional[int]:
-    """Highest COMPLETE (``_SUCCESS``-marked in every listed table) version
-    under state_dir, or None. ``max_version`` (inclusive) bounds the search
-    — the refresh callables pass ``epoch_id - 1`` so a retried epoch never
-    reads its own output. Hadoop FS API — works on HDFS/S3 paths too."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root):
-        return None
-    best = None
-    for st in fs.listStatus(root):
+) -> List[int]:
+    """Sorted COMPLETE versions under state_dir: ``v{N}`` dirs in which
+    every listed table carries ``_SUCCESS``. A version missing one is a
+    write in flight or a crashed epoch and is never read or GC'd.
+    ``max_version`` (inclusive) bounds the search."""
+    fs, Path = _hadoop_fs(spark, state_dir)
+    if not fs.exists(Path(state_dir)):
+        return []
+    versions = []
+    for st in fs.listStatus(Path(state_dir)):
         name = st.getPath().getName()
         if not (st.isDirectory() and name.startswith("v")):
             continue
@@ -244,56 +194,157 @@ def _latest_state_version(
             continue
         if max_version is not None and v > max_version:
             continue
-        ok = all(
-            fs.exists(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{state_dir}/{name}/{t}/_SUCCESS"
-                )
-            )
-            for t in tables
-        )
-        if ok and (best is None or v > best):
-            best = v
-    return best
+        if all(
+            fs.exists(Path(f"{state_dir}/{name}/{t}/_SUCCESS")) for t in tables
+        ):
+            versions.append(v)
+    return sorted(versions)
 
 
-def gc_graph_state(
-    spark: SparkSession, state_dir: str, keep: int = 2
+def _latest_state_version(
+    spark: SparkSession,
+    state_dir: str,
+    max_version: Optional[int] = None,
+    tables: Tuple[str, ...] = GRAPH_STATE_TABLES,
+) -> Optional[int]:
+    """Highest complete version under state_dir, or None. The refresh
+    callables pass ``max_version=epoch_id - 1`` so a retried epoch never
+    reads its own output."""
+    versions = _complete_versions(spark, state_dir, tables, max_version)
+    return versions[-1] if versions else None
+
+
+def _read_state(
+    spark: SparkSession, state_dir: str, version: int, tables: Tuple[str, ...]
+) -> States:
+    vdir = _vdir(state_dir, version)
+    return tuple(spark.read.parquet(f"{vdir}/{t}") for t in tables)
+
+
+def _read_latest(
+    spark: SparkSession, state_dir: str, tables: Tuple[str, ...]
+) -> Optional[States]:
+    cur = _latest_state_version(spark, state_dir, tables=tables)
+    return None if cur is None else _read_state(spark, state_dir, cur, tables)
+
+
+def _write_state(
+    state_dir: str, epoch: int, tables: Tuple[str, ...], frames: States
+) -> None:
+    vdir = _vdir(state_dir, epoch)
+    for t, df in zip(tables, frames):
+        df.write.mode("overwrite").parquet(f"{vdir}/{t}")
+
+
+def gc_state(
+    spark: SparkSession,
+    state_dir: str,
+    tables: Tuple[str, ...],
+    keep: int = 2,
 ) -> int:
-    """Drop all but the ``keep`` newest COMPLETE state versions (plus any
-    incomplete ones newer than the newest complete, which may be a write
-    in flight). Old versions exist only for retry safety — once the
-    streaming checkpoint has advanced past an epoch, its predecessors are
-    dead weight. Returns the number of versions removed."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root):
-        return 0
-    complete = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("v")):
-            continue
-        try:
-            v = int(name[1:])
-        except ValueError:
-            continue
-        ok = all(
-            fs.exists(
-                jvm.org.apache.hadoop.fs.Path(f"{state_dir}/{name}/{t}/_SUCCESS")
-            )
-            for t in ("nodes", "edges")
+    """Drop all but the ``keep`` newest complete versions of a state family.
+    Incomplete versions (a write in flight) and non-version dirs (the dedup
+    ``docs/`` corpus) are never touched. Old versions exist only for retry
+    safety — once the streaming checkpoint has advanced past an epoch, its
+    predecessors are dead weight. Returns the number of versions removed.
+
+    Not ``fsgc.gc_child_dirs``: that keeps the newest dirs by mtime, so an
+    in-flight ``v{N+1}`` would push out the last complete version, and it
+    would delete ``docs/``."""
+    complete = _complete_versions(spark, state_dir, tables)
+    fs, Path = _hadoop_fs(spark, state_dir)
+    doomed = complete[: max(0, len(complete) - max(keep, 1))]
+    for v in doomed:
+        fs.delete(Path(_vdir(state_dir, v)), True)
+    return len(doomed)
+
+
+def _fold_refresh(
+    state_dir: str,
+    tables: Tuple[str, ...],
+    delta: Callable[[DataFrame], States],
+    merge: Callable[[States, States], States],
+):
+    """The foreachBatch callable of a versioned-state family: epoch N
+    writes ``merge(old, delta(batch))`` — or ``delta(batch)`` before the
+    first version — to ``v{N}/{table}`` for each of ``tables``, where
+    ``old`` is the newest complete version strictly below N. ``delta``
+    and ``merge`` return one DataFrame per table, in ``tables`` order.
+
+    Retry contract. Each epoch gets its own immutable version, named by
+    the foreachBatch epoch_id, so a RETRIED epoch overwrites its own
+    directory (idempotent) instead of corrupting the previous state, which
+    the merge is still lazily reading. The old-state lookup is bounded to
+    versions strictly below the current epoch, so a retry whose first
+    attempt already completed every table write (but died before the
+    streaming checkpoint commit) re-merges against the PRE-epoch state
+    rather than double-counting its own output. That makes a replay a
+    no-op even for a merge that is not idempotent (the count-min sum).
+    Readers open the highest complete version; old versions are retained
+    for retry safety — :func:`gc_state` them once the streaming checkpoint
+    has advanced.
+
+    When ``merge`` is associative, the folded state over any closed input
+    EQUALS one batch aggregation of it, however the stream chopped it into
+    micro-batches (the stream==batch tests pin this per family)."""
+
+    def refresh(batch_df: DataFrame, epoch_id: int) -> None:
+        spark = batch_df.sparkSession
+        epoch = int(epoch_id)
+        new = delta(batch_df)
+        cur = _latest_state_version(
+            spark, state_dir, max_version=epoch - 1, tables=tables
         )
-        if ok:
-            complete.append(v)
-    complete.sort()
-    removed = 0
-    for v in complete[: max(0, len(complete) - max(keep, 1))]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_dir}/v{v:08d}"), True)
-        removed += 1
-    return removed
+        if cur is not None:
+            new = merge(_read_state(spark, state_dir, cur, tables), new)
+        _write_state(state_dir, epoch, tables, new)
+
+    return refresh
+
+
+# ---- graph -------------------------------------------------------------------
+
+
+def make_graph_refresh(
+    state_dir: str,
+    dim: int = 64,
+    max_descriptions: Optional[int] = None,
+):
+    """Per-micro-batch incremental graph refresh: aggregate each batch of
+    triples into node/edge DELTA state and merge it into the persistent
+    state tables by key — so the downstream graph tables follow the stream
+    instead of stopping at the triples stage.
+
+    The state combine is associative (sums, min-occurrence carries, set
+    unions; vectors kept as element-wise sums — see graph.py node_state_
+    delta), so the refreshed graph equals the batch aggregate_nodes/
+    aggregate_edges output (retry and fold contract: :func:`_fold_refresh`).
+
+    Triples without a ``cluster`` column (clustering is a global batch
+    stage) get cluster=0, matching the batch pipeline's skip_clustering
+    labeling."""
+    from .graph import (
+        edge_state_delta,
+        merge_edge_state,
+        merge_node_state,
+        node_state_delta,
+    )
+
+    def delta(batch_df: DataFrame) -> States:
+        if "cluster" not in batch_df.columns:
+            batch_df = batch_df.withColumn("cluster", F.lit(0))
+        return (
+            node_state_delta(batch_df, dim=dim, max_descriptions=max_descriptions),
+            edge_state_delta(batch_df, max_descriptions=max_descriptions),
+        )
+
+    def merge(old: States, new: States) -> States:
+        return (
+            merge_node_state(old[0], new[0], max_descriptions),
+            merge_edge_state(old[1], new[1], max_descriptions),
+        )
+
+    return _fold_refresh(state_dir, GRAPH_STATE_TABLES, delta, merge)
 
 
 def read_graph_state(
@@ -306,17 +357,17 @@ def read_graph_state(
     (nodes, edges) or (None, None) when no version is complete yet."""
     from .graph import finalize_edge_state, finalize_node_state
 
-    cur = _latest_state_version(spark, state_dir)
-    if cur is None:
+    state = _read_latest(spark, state_dir, GRAPH_STATE_TABLES)
+    if state is None:
         return None, None
-    vdir = f"{state_dir}/v{cur:08d}"
-    nodes = finalize_node_state(
-        spark.read.parquet(f"{vdir}/nodes"), max_descriptions
+    nodes, edges = state
+    return (
+        finalize_node_state(nodes, max_descriptions),
+        finalize_edge_state(edges, max_descriptions),
     )
-    edges = finalize_edge_state(
-        spark.read.parquet(f"{vdir}/edges"), max_descriptions
-    )
-    return nodes, edges
+
+
+# ---- dedup -------------------------------------------------------------------
 
 
 def stream_dedup_docs(
@@ -346,9 +397,6 @@ def stream_dedup_docs(
     )
 
 
-_DEDUP_STATE_TABLES = ("hashes", "bands", "labels")
-
-
 def make_dedup_refresh(
     state_dir: str,
     id_col: str = "doc_id",
@@ -373,12 +421,12 @@ def make_dedup_refresh(
     5. :func:`openie_spark.dataops.components.update_components` folds the
        verified pairs into the persistent (node, component) labels.
 
-    State layout: ``{state_dir}/v{epoch:08d}/{hashes,bands,labels}`` — one
-    immutable version per epoch with the SAME retry guard as the graph
-    refresh: the previous-state lookup is bounded strictly below the
-    current epoch, so a replayed epoch (writes completed, streaming
-    checkpoint uncommitted) recomputes from the pre-epoch state and its
-    overwrites are idempotent.
+    State layout: ``{state_dir}/v{epoch:08d}/{hashes,bands,labels}`` with
+    the same version lookup and retry guard as :func:`_fold_refresh` — a
+    replayed epoch (writes completed, streaming checkpoint uncommitted)
+    recomputes from the pre-epoch state and its overwrites are
+    idempotent. It keeps its own body because the docs write of step 2
+    sits between reading the old state and deriving the new one.
 
     Determinism note: "first seen" within a batch is the minimum id per
     content hash (micro-batch row order is not defined); with ids that
@@ -392,10 +440,9 @@ def make_dedup_refresh(
     Scale: steps 1–5 are all equi-joins keyed on content_hash / band
     buckets / node ids; per-epoch state rewrite is O(unique docs seen) —
     the same rewrite-per-epoch contract as the graph refresh (compact or
-    GC with :func:`gc_graph_state`'s sibling ``gc_dedup_state``). The
-    exact-Jaccard verify re-reads the accumulated docs table each epoch
-    (pruned to candidate ids by verify_jaccard's semi-join, but still a
-    scan of the docs parquet); with epoch-partitioned docs a deployment
+    GC with :func:`gc_state`). The exact-Jaccard verify re-reads the
+    accumulated docs table each epoch (pruned to candidate ids by
+    verify_jaccard's semi-join, but still a scan of the docs parquet); with epoch-partitioned docs a deployment
     that tracks id→epoch can restrict that scan to the partitions holding
     candidates — not done here because candidates are bounded by the band
     join, so the scan, not the join, is the first thing to shard."""
@@ -410,7 +457,7 @@ def make_dedup_refresh(
         spark = batch_df.sparkSession
         epoch = int(epoch_id)
         cur = _latest_state_version(
-            spark, state_dir, max_version=epoch - 1, tables=_DEDUP_STATE_TABLES
+            spark, state_dir, max_version=epoch - 1, tables=DEDUP_STATE_TABLES
         )
         hashed = batch_df.withColumn(
             "content_hash", F.md5(normalized_text(text_col))
@@ -423,10 +470,9 @@ def make_dedup_refresh(
             .drop("_rk")
         )
         if cur is not None:
-            vdir_prev = f"{state_dir}/v{cur:08d}"
-            prev_hashes = spark.read.parquet(f"{vdir_prev}/hashes")
-            prev_bands = spark.read.parquet(f"{vdir_prev}/bands")
-            prev_labels = spark.read.parquet(f"{vdir_prev}/labels")
+            prev_hashes, prev_bands, prev_labels = _read_state(
+                spark, state_dir, cur, DEDUP_STATE_TABLES
+            )
             new_docs = batch_first.join(prev_hashes, "content_hash", "left_anti")
         else:
             prev_hashes = prev_bands = prev_labels = None
@@ -488,39 +534,14 @@ def make_dedup_refresh(
                 pairs,
             )
 
-        vdir = f"{state_dir}/v{epoch:08d}"
         hashes = new_docs.select("content_hash")
         if prev_hashes is not None:
             hashes = prev_hashes.unionByName(hashes)
-        hashes.write.mode("overwrite").parquet(f"{vdir}/hashes")
-        all_bands.write.mode("overwrite").parquet(f"{vdir}/bands")
-        labels.write.mode("overwrite").parquet(f"{vdir}/labels")
+        _write_state(
+            state_dir, epoch, DEDUP_STATE_TABLES, (hashes, all_bands, labels)
+        )
 
     return refresh
-
-
-def start_dedup_refresh(
-    docs_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger_seconds: Optional[int] = None,
-    **dedup_kwargs,
-):
-    """Wire :func:`make_dedup_refresh` as a foreachBatch sink on a docs
-    stream — the end-to-end streaming dedup story: exact first-seen →
-    near-dup pairs (cross-batch) → incremental connected components, all
-    per micro-batch with per-epoch immutable state."""
-    refresh = make_dedup_refresh(state_dir, **dedup_kwargs)
-    writer = (
-        docs_stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_dedup_survivors(
@@ -541,7 +562,7 @@ def read_dedup_survivors(
     bounded to ``epoch <= cur`` (the latest COMPLETE version), the same
     strictly-consistent cut the versioned state exists to provide; the
     filter is a partition-prune, not a scan."""
-    cur = _latest_state_version(spark, state_dir, tables=_DEDUP_STATE_TABLES)
+    cur = _latest_state_version(spark, state_dir, tables=DEDUP_STATE_TABLES)
     if cur is None:
         return None
     docs = (
@@ -549,51 +570,14 @@ def read_dedup_survivors(
         .filter(F.col("epoch") <= cur)
         .drop("epoch")
     )
-    labels = spark.read.parquet(f"{state_dir}/v{cur:08d}/labels")
+    (labels,) = _read_state(spark, state_dir, cur, ("labels",))
     losers = labels.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
     return docs.join(losers, id_col, "left_anti")
 
 
-def gc_dedup_state(spark: SparkSession, state_dir: str, keep: int = 2) -> int:
-    """Drop all but the ``keep`` newest complete dedup state versions —
-    the docs/epoch=N partitions are part of the live corpus and are never
-    GC'd here. Returns versions removed."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root):
-        return 0
-    complete = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("v")):
-            continue
-        try:
-            v = int(name[1:])
-        except ValueError:
-            continue
-        ok = all(
-            fs.exists(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{state_dir}/{name}/{t}/_SUCCESS"
-                )
-            )
-            for t in _DEDUP_STATE_TABLES
-        )
-        if ok:
-            complete.append(v)
-    complete.sort()
-    removed = 0
-    for v in complete[: max(0, len(complete) - max(keep, 1))]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_dir}/v{v:08d}"), True)
-        removed += 1
-    return removed
-
-
-_CARD_STATE_TABLES = ("registers",)
+# ---- sketches and first-seen -------------------------------------------------
 
 
 def make_cardinality_refresh(
@@ -605,8 +589,8 @@ def make_cardinality_refresh(
     each micro-batch's HLL register table (dataops/cardinality.py) is
     max-merged with the previous state version into an immutable
     ``v{epoch}/registers`` snapshot. Max-merge is idempotent AND the
-    old-state lookup is bounded strictly below the epoch (the same
-    retry guard as the graph/dedup refreshes), so a replayed epoch —
+    old-state lookup is bounded strictly below the epoch (the
+    :func:`_fold_refresh` retry guard), so a replayed epoch —
     completed write, uncommitted checkpoint — is a no-op twice over.
     State size is bounded at groups*256 rows per version regardless of
     stream volume; the registers stay a PLAIN table, so any engine can
@@ -614,48 +598,12 @@ def make_cardinality_refresh(
     from .dataops.cardinality import hll_merge, hll_registers
 
     group_cols = list(group_cols)
-
-    def refresh(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = hll_registers(batch_df, group_cols, value_col)
-        cur = _latest_state_version(
-            spark,
-            state_dir,
-            max_version=int(epoch_id) - 1,
-            tables=_CARD_STATE_TABLES,
-        )
-        if cur is not None:
-            old = spark.read.parquet(f"{state_dir}/v{cur:08d}/registers")
-            new = hll_merge(old, delta)
-        else:
-            new = delta
-        new.write.mode("overwrite").parquet(
-            f"{state_dir}/v{int(epoch_id):08d}/registers"
-        )
-
-    return refresh
-
-
-def start_cardinality_refresh(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    group_cols,
-    value_col: str,
-    trigger_seconds: Optional[int] = None,
-):
-    """Wire :func:`make_cardinality_refresh` as a foreachBatch sink."""
-    refresh = make_cardinality_refresh(state_dir, group_cols, value_col)
-    writer = (
-        stream_df.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _fold_refresh(
+        state_dir,
+        REGISTER_STATE_TABLES,
+        lambda batch: (hll_registers(batch, group_cols, value_col),),
+        lambda old, new: (hll_merge(old[0], new[0]),),
     )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_cardinality(spark: SparkSession, state_dir: str):
@@ -667,17 +615,8 @@ def read_cardinality(spark: SparkSession, state_dir: str):
     contract."""
     from .dataops.cardinality import hll_estimate
 
-    cur = _latest_state_version(
-        spark, state_dir, tables=_CARD_STATE_TABLES
-    )
-    if cur is None:
-        return None
-    return hll_estimate(
-        spark.read.parquet(f"{state_dir}/v{cur:08d}/registers")
-    )
-
-
-_FREQ_STATE_TABLES = ("registers",)
+    state = _read_latest(spark, state_dir, REGISTER_STATE_TABLES)
+    return None if state is None else hll_estimate(state[0])
 
 
 def make_frequency_refresh(
@@ -692,61 +631,22 @@ def make_frequency_refresh(
     ``v{epoch}/registers`` snapshot.
 
     Sum-merge — unlike the HLL's max — is NOT idempotent, which is
-    exactly why the version discipline matters here: the old-state
-    lookup is bounded strictly below the current epoch, so a replayed
-    epoch (completed write, uncommitted checkpoint) re-derives the SAME
-    snapshot from the same inputs and overwrites it — idempotence at
-    the version level even though the merge op cannot provide it.
-    State stays bounded at groups*D*W rows per version; the registers
-    are a plain table any engine can re-aggregate or estimate from."""
+    exactly why the version discipline matters here: a replayed epoch
+    (completed write, uncommitted checkpoint) re-derives the SAME
+    snapshot from the same pre-epoch inputs and overwrites it
+    (:func:`_fold_refresh`) — idempotence at the version level even
+    though the merge op cannot provide it. State stays bounded at
+    groups*D*W rows per version; the registers are a plain table any
+    engine can re-aggregate or estimate from."""
     from .dataops.frequency import cm_merge, cm_registers
 
     group_cols = list(group_cols)
-
-    def refresh(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = cm_registers(batch_df, group_cols, value_col, weight_col)
-        cur = _latest_state_version(
-            spark,
-            state_dir,
-            max_version=int(epoch_id) - 1,
-            tables=_FREQ_STATE_TABLES,
-        )
-        if cur is not None:
-            old = spark.read.parquet(f"{state_dir}/v{cur:08d}/registers")
-            new = cm_merge(old, delta)
-        else:
-            new = delta
-        new.write.mode("overwrite").parquet(
-            f"{state_dir}/v{int(epoch_id):08d}/registers"
-        )
-
-    return refresh
-
-
-def start_frequency_refresh(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    group_cols,
-    value_col: str,
-    weight_col: Optional[str] = None,
-    trigger_seconds: Optional[int] = None,
-):
-    """Wire :func:`make_frequency_refresh` as a foreachBatch sink."""
-    refresh = make_frequency_refresh(
-        state_dir, group_cols, value_col, weight_col
+    return _fold_refresh(
+        state_dir,
+        REGISTER_STATE_TABLES,
+        lambda batch: (cm_registers(batch, group_cols, value_col, weight_col),),
+        lambda old, new: (cm_merge(old[0], new[0]),),
     )
-    writer = (
-        stream_df.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_frequency(spark: SparkSession, state_dir: str):
@@ -756,15 +656,12 @@ def read_frequency(spark: SparkSession, state_dir: str):
     IDENTICAL to batch cm_registers over the concatenated input; pipe
     it into dataops.frequency.cm_estimate with a key set to get the
     hot-key upper bounds."""
-    cur = _latest_state_version(
-        spark, state_dir, tables=_FREQ_STATE_TABLES
-    )
-    if cur is None:
-        return None
-    return spark.read.parquet(f"{state_dir}/v{cur:08d}/registers")
+    state = _read_latest(spark, state_dir, REGISTER_STATE_TABLES)
+    return None if state is None else state[0]
 
 
-_FIRSTSEEN_STATE_TABLES = ("first_seen",)
+def _min_first_day(df: DataFrame) -> DataFrame:
+    return df.groupBy("key").agg(F.min("first_day").alias("first_day"))
 
 
 def make_firstseen_refresh(
@@ -784,58 +681,19 @@ def make_firstseen_refresh(
     overhead; at 100 TB shard the state table by key hash and the
     min-merge stays co-partitioned."""
 
-    def refresh(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = (
-            batch_df.select(
-                F.col(key_col).alias("key"),
-                F.to_date(F.col(ts_col)).alias("first_day"),
-            )
-            .groupBy("key")
-            .agg(F.min("first_day").alias("first_day"))
+    def delta(batch_df: DataFrame) -> States:
+        days = batch_df.select(
+            F.col(key_col).alias("key"),
+            F.to_date(F.col(ts_col)).alias("first_day"),
         )
-        cur = _latest_state_version(
-            spark,
-            state_dir,
-            max_version=int(epoch_id) - 1,
-            tables=_FIRSTSEEN_STATE_TABLES,
-        )
-        if cur is not None:
-            old = spark.read.parquet(f"{state_dir}/v{cur:08d}/first_seen")
-            new = (
-                old.unionByName(delta)
-                .groupBy("key")
-                .agg(F.min("first_day").alias("first_day"))
-            )
-        else:
-            new = delta
-        new.write.mode("overwrite").parquet(
-            f"{state_dir}/v{int(epoch_id):08d}/first_seen"
-        )
+        return (_min_first_day(days),)
 
-    return refresh
-
-
-def start_firstseen_refresh(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    trigger_seconds: Optional[int] = None,
-):
-    """Wire :func:`make_firstseen_refresh` as a foreachBatch sink."""
-    refresh = make_firstseen_refresh(state_dir, key_col, ts_col)
-    writer = (
-        stream_df.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _fold_refresh(
+        state_dir,
+        FIRSTSEEN_STATE_TABLES,
+        delta,
+        lambda old, new: (_min_first_day(old[0].unionByName(new[0])),),
     )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_growth_curve(spark: SparkSession, state_dir: str):
@@ -845,17 +703,13 @@ def read_growth_curve(spark: SparkSession, state_dir: str):
     identical to batch min(day) over the concatenated input, this
     equals the batch activity curve's new/cum columns over all data
     seen so far."""
-    from pyspark.sql.window import Window
-
-    cur = _latest_state_version(
-        spark, state_dir, tables=_FIRSTSEEN_STATE_TABLES
-    )
-    if cur is None:
+    state = _read_latest(spark, state_dir, FIRSTSEEN_STATE_TABLES)
+    if state is None:
         return None
-    fs = spark.read.parquet(f"{state_dir}/v{cur:08d}/first_seen")
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     return (
-        fs.groupBy(F.col("first_day").alias("day"))
+        state[0]
+        .groupBy(F.col("first_day").alias("day"))
         .agg(F.count(F.lit(1)).cast("long").alias("new_keys"))
         .withColumn("cum_keys", F.sum("new_keys").over(w).cast("long"))
     )

@@ -220,9 +220,11 @@ def test_streaming_dedup_refresh_equals_batch(spark, tmp_path):
     from openie_spark.dataops.components import dedup_survivors
     from openie_spark.dataops.dedup import exact_dedup, minhash_lsh_pairs
     from openie_spark.streaming import (
-        gc_dedup_state,
+        DEDUP_STATE_TABLES,
+        gc_state,
+        make_dedup_refresh,
         read_dedup_survivors,
-        start_dedup_refresh,
+        start_refresh,
     )
 
     b0, b1, b2 = _dedup_corpus()
@@ -238,8 +240,10 @@ def test_streaming_dedup_refresh_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    q = start_dedup_refresh(
-        stream, str(tmp_path / "state"), str(tmp_path / "ck"), **params
+    q = start_refresh(
+        stream,
+        make_dedup_refresh(str(tmp_path / "state"), **params),
+        str(tmp_path / "ck"),
     )
     q.awaitTermination(180)
 
@@ -269,7 +273,9 @@ def test_streaming_dedup_refresh_equals_batch(spark, tmp_path):
         [d for d in os.listdir(tmp_path / "state") if d.startswith("v")]
     )
     assert n_versions >= 3
-    removed = gc_dedup_state(spark, str(tmp_path / "state"), keep=1)
+    removed = gc_state(
+        spark, str(tmp_path / "state"), DEDUP_STATE_TABLES, keep=1
+    )
     assert removed == n_versions - 1
     again = read_dedup_survivors(spark, str(tmp_path / "state"))
     assert {r["doc_id"] for r in again.collect()} == want_ids
@@ -426,7 +432,7 @@ def test_graph_refresh_retry_is_idempotent(spark, tmp_path):
 
 
 def test_incremental_graph_refresh_equals_batch(spark, tmp_path):
-    """start_graph_refresh merges per-micro-batch node/edge deltas into the
+    """make_graph_refresh merges per-micro-batch node/edge deltas into the
     persistent state tables; over a closed input chopped into several
     micro-batches (maxFilesPerTrigger=1 over multiple file drops), the
     refreshed graph read back through read_graph_state must EQUAL the
@@ -434,9 +440,10 @@ def test_incremental_graph_refresh_equals_batch(spark, tmp_path):
     contract (VERDICT r4 #7)."""
     from openie_spark.graph import aggregate_edges, aggregate_nodes
     from openie_spark.streaming import (
-        read_pages_stream,
+        make_graph_refresh,
         read_graph_state,
-        start_graph_refresh,
+        read_pages_stream,
+        start_refresh,
         stream_triples,
     )
 
@@ -452,11 +459,10 @@ def test_incremental_graph_refresh_equals_batch(spark, tmp_path):
         lang="ru",
         with_vectors=True,
     )
-    q = start_graph_refresh(
+    q = start_refresh(
         stream,
-        str(tmp_path / "graph_state"),
+        make_graph_refresh(str(tmp_path / "graph_state"), dim=64),
         str(tmp_path / "refresh_ckpt"),
-        dim=64,
     )
     q.awaitTermination(180)
 
@@ -489,9 +495,11 @@ def test_incremental_graph_refresh_equals_batch(spark, tmp_path):
     assert got[1] == want[1]
 
     # explicit GC keeps the newest versions and the latest state readable
-    from openie_spark.streaming import gc_graph_state
+    from openie_spark.streaming import GRAPH_STATE_TABLES, gc_state
 
-    removed = gc_graph_state(spark, str(tmp_path / "graph_state"), keep=1)
+    removed = gc_state(
+        spark, str(tmp_path / "graph_state"), GRAPH_STATE_TABLES, keep=1
+    )
     assert removed == len(versions) - 1
     n2, e2 = read_graph_state(spark, str(tmp_path / "graph_state"))
     assert _graph_snapshot(n2, e2) == want
@@ -512,7 +520,7 @@ def test_streaming_cardinality_equals_batch_and_retry_idempotent(
     from openie_spark.streaming import (
         make_cardinality_refresh,
         read_cardinality,
-        start_cardinality_refresh,
+        start_refresh,
     )
 
     batches = [
@@ -532,12 +540,10 @@ def test_streaming_cardinality_equals_batch_and_retry_idempotent(
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    q = start_cardinality_refresh(
+    q = start_refresh(
         stream,
-        str(tmp_path / "state"),
+        make_cardinality_refresh(str(tmp_path / "state"), ["grp"], "val"),
         str(tmp_path / "ck"),
-        ["grp"],
-        "val",
     )
     q.awaitTermination(180)
 
@@ -588,7 +594,7 @@ def test_streaming_frequency_equals_batch_and_retry_safe(spark, tmp_path):
     from openie_spark.streaming import (
         make_frequency_refresh,
         read_frequency,
-        start_frequency_refresh,
+        start_refresh,
     )
 
     batches = [
@@ -608,12 +614,10 @@ def test_streaming_frequency_equals_batch_and_retry_safe(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    q = start_frequency_refresh(
+    q = start_refresh(
         stream,
-        str(tmp_path / "state"),
+        make_frequency_refresh(str(tmp_path / "state"), ["grp"], "val"),
         str(tmp_path / "ck"),
-        ["grp"],
-        "val",
     )
     q.awaitTermination(180)
 
@@ -674,7 +678,7 @@ def test_streaming_firstseen_growth_curve_equals_batch(spark, tmp_path):
     from openie_spark.streaming import (
         make_firstseen_refresh,
         read_growth_curve,
-        start_firstseen_refresh,
+        start_refresh,
     )
 
     d = datetime.datetime
@@ -697,8 +701,8 @@ def test_streaming_firstseen_growth_curve_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    q = start_firstseen_refresh(
-        stream, str(tmp_path / "state"), str(tmp_path / "ck")
+    q = start_refresh(
+        stream, make_firstseen_refresh(str(tmp_path / "state")), str(tmp_path / "ck")
     )
     q.awaitTermination(180)
 
@@ -737,3 +741,118 @@ def test_streaming_firstseen_growth_curve_equals_batch(spark, tmp_path):
         for r in spark.read.parquet(f"{state2}/v00000001/first_seen").collect()
     }
     assert once == twice
+
+
+def test_incomplete_version_is_never_read_or_collected(spark, tmp_path):
+    """A version counts only once EVERY table of its family carries
+    _SUCCESS. A v2 holding only ``nodes`` (an epoch that died between its
+    table writes) is skipped by the reader, is not counted toward gc's
+    ``keep``, and is left in place."""
+    import os
+
+    from openie_spark.graph import finalize_node_state
+    from openie_spark.streaming import (
+        GRAPH_STATE_TABLES,
+        _latest_state_version,
+        gc_state,
+        make_graph_refresh,
+        read_graph_state,
+    )
+
+    state = tmp_path / "state"
+    refresh = make_graph_refresh(str(state), dim=0)
+    refresh(batch_triples(spark, 6, seed=13), 0)
+    refresh(batch_triples(spark, 6, seed=14), 1)
+    # v2/nodes holds v0's nodes, so a reader that took v2 would show it
+    spark.read.parquet(f"{state}/v00000000/nodes").write.parquet(
+        f"{state}/v00000002/nodes"
+    )
+
+    def node_weights(nodes):
+        return sorted(tuple(r) for r in nodes.select("lemma_key", "weight").collect())
+
+    v0, v1 = (
+        node_weights(
+            finalize_node_state(spark.read.parquet(f"{state}/v{v:08d}/nodes"))
+        )
+        for v in (0, 1)
+    )
+    assert v0 != v1
+    assert _latest_state_version(spark, str(state)) == 1
+    nodes, edges = read_graph_state(spark, str(state))
+    assert edges is not None
+    assert node_weights(nodes) == v1
+
+    assert gc_state(spark, str(state), GRAPH_STATE_TABLES, keep=1) == 1
+    assert sorted(os.listdir(state)) == ["v00000001", "v00000002"]
+    assert node_weights(read_graph_state(spark, str(state))[0]) == v1
+
+
+def test_triples_rate_monitor_counts_per_window(spark, tmp_path):
+    """The windowed rate monitor over a closed input of several file drops
+    (one micro-batch each, append mode): every warc_ts window it emits
+    holds the batch count of ok_triples whose page falls in that window.
+    A last drop with one non-ru page far in the future moves the watermark
+    past every real window, so all of them are emitted; it adds no
+    triples."""
+    from openie_spark.streaming import read_pages_stream, triples_rate_monitor
+
+    t0 = 1767225600  # 2026-01-01 00:00 UTC
+    pages = pages_df(spark, 18, seed=31, n_sents=3, partitions=1).withColumn(
+        "_drop", F.abs(F.hash("url")) % 3
+    ).withColumn(
+        "warc_ts",
+        F.timestamp_seconds(
+            F.lit(t0) + F.col("_drop") * 3600 + F.abs(F.hash("url")) % 3000
+        ),
+    )
+    assert pages.select("url").distinct().count() == 18
+    src = tmp_path / "drops"
+    for i in range(3):
+        pages.filter(F.col("_drop") == i).drop("_drop").write.parquet(
+            str(src / f"part{i}")
+        )
+    pages.limit(1).drop("_drop").select(
+        F.lit("https://sentinel.example.org/").alias("url"),
+        F.timestamp_seconds(F.lit(t0 + 10 * 3600)).alias("warc_ts"),
+        "html",
+        "text",
+        F.lit("en").alias("lang"),
+    ).write.parquet(str(src / "part3"))
+
+    monitor = triples_rate_monitor(
+        read_pages_stream(spark, str(src / "*"), max_files_per_trigger=1),
+        window="1 hour",
+        watermark="10 minutes",
+    )
+    q = (
+        monitor.writeStream.format("memory")
+        .queryName("triples_rate_monitor_test")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    got = {
+        (r["window"]["start"], r["window"]["end"]): r["n_triples"]
+        for r in spark.table("triples_rate_monitor_test").collect()
+    }
+
+    all_pages = spark.read.parquet(str(src / "*"))
+    triples = ok_triples(
+        extract_triples_df(
+            parse_pages(clean_pages(all_pages, lang="ru")),
+            frozenset(STOPWORDS_FIXTURE),
+            with_vectors=False,
+        )
+    )
+    want = {
+        (r["window"]["start"], r["window"]["end"]): r["n_triples"]
+        for r in triples.join(all_pages.select("url", "warc_ts"), "url")
+        .groupBy(F.window("warc_ts", "1 hour"))
+        .agg(F.count(F.lit(1)).alias("n_triples"))
+        .collect()
+    }
+    assert len(want) == 3
+    assert got == want

@@ -1,5 +1,5 @@
 """A/B-bench the unfused clean→parse→extract stages vs the fused
-single-mapInPandas path (PipelineConfig.fuse_extract) to decide the
+single-mapInPandas path (run_pipeline without a work_dir) to decide the
 no-work_dir default (VERDICT r3 item 7).
 
 Protocol: same deterministic corpus, interleaved reps (fused/unfused
