@@ -6,7 +6,7 @@ verify_jaccard pair snapshots) never delete a SIBLING run implicitly —
 a concurrent run's returned DataFrames may still be lazily reading it.
 Reclaiming disk across runs is therefore an explicit step: keep the
 ``keep`` newest children of ``root`` (by modification time), delete the
-rest. HDFS/S3-safe (Hadoop FS API, same contract as merge.gc_merge_runs).
+rest. HDFS/S3-safe (Hadoop FS API).
 """
 
 from __future__ import annotations

@@ -10,18 +10,26 @@ ids. We store sets as proper ``array`` columns instead of the reference's
 reference's order-dependent ``(w·v_old + v_new)/2`` running update
 (documented delta — vectors only gate merges; SURVEY.md §2.6 A1).
 
-Scale design:
-- groupBy on Zipfian lemma keys → two-phase **salted** aggregation
-  (``salt = pmod(hash(url, sent_id), n_salts)``): partial agg on
-  (key, salt) spreads a hot key over n_salts reducers, the final agg merges
-  n_salts partials per key. Catalyst's map-side partial aggregation already
-  bounds sum/count skew; salting additionally bounds the per-reducer size
-  of the collect_set state, which is the real OOM risk for hot lemmas.
+Design: batch and streaming share one aggregation per table. The batch
+``aggregate_nodes``/``aggregate_edges`` are the finalized state delta of the
+whole input (the table is the first fold of its stream), so the salting
+decision lives in exactly one function per table:
+- nodes: groupBy on Zipfian lemma keys → two-phase **salted** aggregation
+  in ``node_state_delta`` (``salt = pmod(hash(url, sent_id), n_salts)``):
+  partial agg on (key, salt) spreads a hot key over n_salts reducers, the
+  final agg merges n_salts partials per key. Catalyst's map-side partial
+  aggregation already bounds sum/count skew; salting additionally bounds
+  the per-reducer size of the collect_set state, which is the real OOM
+  risk for hot lemmas.
+- edges: unsalted by construction in ``edge_state_delta`` (~0.8 distinct
+  edge keys per triple, so a salt round would only double the shuffle).
 - ``max_descriptions`` caps per-node description sets at scale (off by
   default for reference parity at test scale).
 - "first label" is made deterministic by electing min_by a stable
   occurrence key (url, sent_id) — the reference's "first inserted" is its
   single-threaded arrival order, which has no distributed analogue.
+- ``combine_edges`` is the one re-aggregation rule for edge rows that come
+  to share a key after merge re-pointing or a top-K bypass round.
 """
 
 from __future__ import annotations
@@ -31,8 +39,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-IS_A = "_is_a_"
-RELATES_TO = "_relates_to_"
+from .rules import IS_A, RELATES_TO
 
 
 def edge_key_col() -> F.Column:
@@ -95,6 +102,22 @@ def node_occurrences(triples_df: DataFrame) -> DataFrame:
     return left.unionByName(right)
 
 
+def edge_occurrences(triples_df: DataFrame) -> DataFrame:
+    """Each triple as its edge occurrence."""
+    return triples_df.select(
+        F.col("left_arg_lemmas").alias("src"),
+        F.col("right_arg_lemmas").alias("dst"),
+        edge_key_col().alias("edge_key"),
+        F.col("relation").alias("label"),
+        F.col("relation_lemmas").alias("lemmas"),
+        F.col("right_deprel").alias("deprel"),
+        "sent_text",
+        "cluster",
+        "url",
+        "sent_id",
+    )
+
+
 def _vector_dim(df: DataFrame, col: str) -> int:
     """Vector width via a ONE-ROW PEEK — this runs a Spark job (a
     ``.first()`` over the input's lineage). The pipeline always passes
@@ -109,145 +132,33 @@ def _vector_dim(df: DataFrame, col: str) -> int:
 def aggregate_nodes(
     triples_df: DataFrame,
     n_salts: int = 8,
-    salted: bool = True,
     max_descriptions: Optional[int] = None,
     dim: Optional[int] = None,
 ) -> DataFrame:
-    """triples (with ``cluster`` column) → nodes(lemma_key, label,
-    descriptions, weight, vector, clusters).
-
-    Vector mean is computed as ``dim`` element-wise sum() aggregates —
-    whole-stage-codegen'd with map-side partial aggregation — NOT a
-    higher-order ``aggregate(collect_list(...))`` fold, which Catalyst
-    interprets row-by-row and which collects every vector into the reducer
-    (measured ~3× slower and O(group) reducer memory at sandbox scale; far
-    worse on hot keys at web scale).
-    """
-    occ = node_occurrences(triples_df).withColumn("occ_key", _occurrence_key())
-    if dim is None:
-        dim = _vector_dim(occ, "vector")
-    vcols = [F.sum(F.col("vector")[i]).alias(f"_v{i}") for i in range(dim)]
-
-    if salted:
-        partial = (
-            occ.withColumn(
-                "salt", F.pmod(F.xxhash64("url", "sent_id"), F.lit(n_salts))
-            )
-            .groupBy("lemma_key", "salt")
-            .agg(
-                F.count(F.lit(1)).alias("w"),
-                F.min_by("label", "occ_key").alias("label"),
-                F.min("occ_key").alias("occ_key"),
-                _capped_set("sent_text", max_descriptions).alias("descs"),
-                F.collect_set("cluster").alias("clusters"),
-                *vcols,
-            )
-        )
-        nodes = partial.groupBy("lemma_key").agg(
-            F.sum("w").alias("weight"),
-            F.min_by("label", "occ_key").alias("label"),
-            _merge_capped_sets("descs", max_descriptions).alias("descriptions"),
-            F.array_distinct(F.flatten(F.collect_list("clusters"))).alias("clusters"),
-            *[F.sum(F.col(f"_v{i}")).alias(f"_v{i}") for i in range(dim)],
-        )
-    else:
-        nodes = occ.groupBy("lemma_key").agg(
-            F.count(F.lit(1)).alias("weight"),
-            F.min_by("label", "occ_key").alias("label"),
-            F.collect_set("sent_text").alias("descriptions"),
-            F.collect_set("cluster").alias("clusters"),
-            *vcols,
-        )
-
-    if dim > 0:
-        nodes = nodes.withColumn(
-            "vector",
-            F.array(
-                *[(F.col(f"_v{i}") / F.col("weight")).cast("float") for i in range(dim)]
-            ),
-        ).drop(*[f"_v{i}" for i in range(dim)])
-    else:
-        nodes = nodes.withColumn("vector", F.lit(None).cast("array<float>"))
-    if max_descriptions is not None:
-        nodes = nodes.withColumn(
-            "descriptions", F.slice(F.array_sort("descriptions"), 1, max_descriptions)
-        )
-    return nodes
+    """triples (with ``cluster`` column) → nodes(lemma_key, weight, label,
+    descriptions, clusters, vector): the node state of the whole input,
+    finalized — the batch table is the first fold of the streaming state."""
+    return finalize_node_state(
+        node_state_delta(triples_df, dim, max_descriptions, n_salts), max_descriptions
+    )
 
 
 def aggregate_edges(
-    triples_df: DataFrame,
-    n_salts: int = 8,
-    salted: bool = False,
-    max_descriptions: Optional[int] = None,
+    triples_df: DataFrame, max_descriptions: Optional[int] = None
 ) -> DataFrame:
-    """triples (with ``cluster``) → edges(src, dst, edge_key, label, lemmas,
-    deprel, descriptions, weight, clusters).
-
-    Unsalted by default: the edge key space (src × dst × relation) is nearly
-    1:1 with triple occurrences — measured ~0.8 distinct keys per input row
-    on the synthetic corpus — so a salt round just doubles the shuffle for
-    groups that are already singletons. Node lemma keys are the genuinely
-    Zipfian side and keep the salted default. Flip ``salted=True`` for
-    corpora with pathological duplicate-sentence skew."""
-    base = triples_df.select(
-        F.col("left_arg_lemmas").alias("src"),
-        F.col("right_arg_lemmas").alias("dst"),
-        edge_key_col().alias("edge_key"),
-        F.col("relation").alias("label"),
-        F.col("relation_lemmas").alias("lemmas"),
-        F.col("right_deprel").alias("deprel"),
-        "sent_text",
-        "cluster",
-        "url",
-        "sent_id",
-    ).withColumn("occ_key", _occurrence_key())
-
-    if salted:
-        partial = (
-            base.withColumn(
-                "salt", F.pmod(F.xxhash64("url", "sent_id"), F.lit(n_salts))
-            )
-            .groupBy("src", "dst", "edge_key", "salt")
-            .agg(
-                F.count(F.lit(1)).alias("w"),
-                F.min_by("label", "occ_key").alias("label"),
-                F.min_by("lemmas", "occ_key").alias("lemmas"),
-                F.min_by("deprel", "occ_key").alias("deprel"),
-                F.min("occ_key").alias("occ_key"),
-                _capped_set("sent_text", max_descriptions).alias("descs"),
-                F.collect_set("cluster").alias("clusters"),
-            )
-        )
-        edges = partial.groupBy("src", "dst", "edge_key").agg(
-            F.sum("w").alias("weight"),
-            F.min_by("label", "occ_key").alias("label"),
-            F.min_by("lemmas", "occ_key").alias("lemmas"),
-            F.min_by("deprel", "occ_key").alias("deprel"),
-            _merge_capped_sets("descs", max_descriptions).alias("descriptions"),
-            F.array_distinct(F.flatten(F.collect_list("clusters"))).alias("clusters"),
-        )
-    else:
-        edges = base.groupBy("src", "dst", "edge_key").agg(
-            F.count(F.lit(1)).alias("weight"),
-            F.min_by("label", "occ_key").alias("label"),
-            F.min_by("lemmas", "occ_key").alias("lemmas"),
-            F.min_by("deprel", "occ_key").alias("deprel"),
-            F.collect_set("sent_text").alias("descriptions"),
-            F.collect_set("cluster").alias("clusters"),
-        )
-    if max_descriptions is not None:
-        edges = edges.withColumn(
-            "descriptions", F.slice(F.array_sort("descriptions"), 1, max_descriptions)
-        )
-    return edges
+    """triples (with ``cluster``) → edges(src, dst, edge_key, weight, label,
+    lemmas, deprel, descriptions, clusters): the edge state of the whole
+    input, finalized."""
+    return finalize_edge_state(
+        edge_state_delta(triples_df, max_descriptions), max_descriptions
+    )
 
 
 # ---- incremental (mergeable) aggregation state -------------------------------
 #
-# The streaming graph refresh needs per-key state whose combine is
-# ASSOCIATIVE, so that any micro-batch split of the input reaches the exact
-# same result as one batch aggregation:
+# Batch and streaming share one aggregation per table: the state below. Its
+# combine is ASSOCIATIVE, so that any micro-batch split of the input reaches
+# the exact same result as one batch aggregation:
 #   weight        → sum
 #   label         → carried with min(occ_key); combine keeps the pair with
 #                   the smaller occ_key (min_by is a semilattice over the
@@ -263,42 +174,58 @@ def node_state_delta(
     triples_df: DataFrame,
     dim: Optional[int] = None,
     max_descriptions: Optional[int] = None,
+    n_salts: int = 8,
 ) -> DataFrame:
-    """One micro-batch's node aggregation STATE (not finalized nodes)."""
+    """One batch's node aggregation STATE (not finalized nodes), as a
+    two-phase salted aggregation: lemma keys are Zipfian, so the partial agg
+    on (key, salt) spreads a hot key over ``n_salts`` reducers.
+
+    Vector sums are ``dim`` element-wise sum() aggregates —
+    whole-stage-codegen'd with map-side partial aggregation — NOT a
+    higher-order ``aggregate(collect_list(...))`` fold, which Catalyst
+    interprets row-by-row and which collects every vector into the reducer
+    (measured ~3× slower and O(group) reducer memory at sandbox scale; far
+    worse on hot keys at web scale)."""
     occ = node_occurrences(triples_df).withColumn("occ_key", _occurrence_key())
     if dim is None:
         dim = _vector_dim(occ, "vector")
-    vcols = [F.sum(F.col("vector")[i].cast("double")).alias(f"_v{i}") for i in range(dim)]
-    st = occ.groupBy("lemma_key").agg(
-        F.count(F.lit(1)).alias("weight"),
+    vnames = [f"_v{i}" for i in range(dim)]
+    partial = (
+        occ.withColumn("salt", F.pmod(F.xxhash64("url", "sent_id"), F.lit(n_salts)))
+        .groupBy("lemma_key", "salt")
+        .agg(
+            F.count(F.lit(1)).alias("w"),
+            F.min_by("label", "occ_key").alias("label"),
+            F.min("occ_key").alias("occ_key"),
+            _capped_set("sent_text", max_descriptions).alias("descs"),
+            F.collect_set("cluster").alias("clusters"),
+            *[
+                F.sum(F.col("vector")[i].cast("double")).alias(v)
+                for i, v in enumerate(vnames)
+            ],
+        )
+    )
+    st = partial.groupBy("lemma_key").agg(
+        F.sum("w").alias("weight"),
         F.min_by("label", "occ_key").alias("label"),
         F.min("occ_key").alias("occ_key"),
-        _capped_set("sent_text", max_descriptions).alias("descriptions"),
-        F.collect_set("cluster").alias("clusters"),
-        *vcols,
+        _merge_capped_sets("descs", max_descriptions).alias("descriptions"),
+        F.array_distinct(F.flatten(F.collect_list("clusters"))).alias("clusters"),
+        *[F.sum(v).alias(v) for v in vnames],
     )
-    return st.withColumn(
-        "vsum", F.array(*[F.col(f"_v{i}") for i in range(dim)])
-    ).drop(*[f"_v{i}" for i in range(dim)])
+    return st.withColumn("vsum", F.array(*vnames)).drop(*vnames)
 
 
 def edge_state_delta(
     triples_df: DataFrame, max_descriptions: Optional[int] = None
 ) -> DataFrame:
-    """One micro-batch's edge aggregation STATE."""
-    base = triples_df.select(
-        F.col("left_arg_lemmas").alias("src"),
-        F.col("right_arg_lemmas").alias("dst"),
-        edge_key_col().alias("edge_key"),
-        F.col("relation").alias("label"),
-        F.col("relation_lemmas").alias("lemmas"),
-        F.col("right_deprel").alias("deprel"),
-        "sent_text",
-        "cluster",
-        "url",
-        "sent_id",
-    ).withColumn("occ_key", _occurrence_key())
-    return base.groupBy("src", "dst", "edge_key").agg(
+    """One batch's edge aggregation STATE. Unsalted by construction: the edge
+    key space (src × dst × relation) is nearly 1:1 with triple occurrences —
+    measured ~0.8 distinct keys per input row on the synthetic corpus — so a
+    salt round would just double the shuffle for groups that are already
+    singletons. Node lemma keys are the genuinely Zipfian side."""
+    occ = edge_occurrences(triples_df).withColumn("occ_key", _occurrence_key())
+    return occ.groupBy("src", "dst", "edge_key").agg(
         F.count(F.lit(1)).alias("weight"),
         F.min_by("label", "occ_key").alias("label"),
         F.min_by("lemmas", "occ_key").alias("lemmas"),
@@ -407,6 +334,21 @@ def finalize_edge_state(
     return out.select(
         "src", "dst", "edge_key", "weight", "label", "lemmas", "deprel",
         "descriptions", "clusters",
+    )
+
+
+def combine_edges(edges: DataFrame) -> DataFrame:
+    """Re-aggregate finalized edge rows that share (src, dst, edge_key) —
+    after the merge re-points endpoints or a top-K bypass round adds edges.
+    The occurrence key is gone at this point, so label/lemmas/deprel take
+    the min instead of the first occurrence's value."""
+    return edges.groupBy("src", "dst", "edge_key").agg(
+        F.sum("weight").alias("weight"),
+        F.min("label").alias("label"),
+        F.min("lemmas").alias("lemmas"),
+        F.min("deprel").alias("deprel"),
+        F.array_distinct(F.flatten(F.collect_list("descriptions"))).alias("descriptions"),
+        F.array_distinct(F.flatten(F.collect_list("clusters"))).alias("clusters"),
     )
 
 

@@ -49,8 +49,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-IS_A = "_is_a_"
-RELATES_TO = "_relates_to_"
+from .fsgc import gc_child_dirs
+from .graph import _vector_dim, combine_edges
+from .rules import IS_A, RELATES_TO
+
 COSINE_THRESHOLD = 0.3  # reference: relations.py:26
 
 
@@ -364,8 +366,6 @@ def apply_node_mapping(
     bmap = F.broadcast(mapping)
 
     # ---- nodes -------------------------------------------------------------
-    from .graph import _vector_dim
-
     dim = cfg.dim if cfg.dim is not None else _vector_dim(nodes, "vector")
     n = nodes.join(
         bmap.withColumnRenamed("other", "lemma_key"), "lemma_key", "left"
@@ -439,15 +439,7 @@ def apply_node_mapping(
         "dst", F.coalesce("dst_main", "dst")
     ).drop("src_main", "dst_main")
 
-    merged_edges = e.groupBy("src", "dst", "edge_key").agg(
-        F.sum("weight").alias("weight"),
-        F.min("label").alias("label"),
-        F.min("lemmas").alias("lemmas"),
-        F.min("deprel").alias("deprel"),
-        F.array_distinct(F.flatten(F.collect_list("descriptions"))).alias("descriptions"),
-        F.array_distinct(F.flatten(F.collect_list("clusters"))).alias("clusters"),
-    )
-    return merged_nodes, merged_edges
+    return merged_nodes, combine_edges(e)
 
 
 # ---- edge merging (G4/G5) ---------------------------------------------------
@@ -834,21 +826,7 @@ def gc_merge_runs(spark, checkpoint_dir: str, keep: int = 1) -> int:
     lazily — so disk reclamation across runs is this explicit step.
     Returns the number of run dirs removed. HDFS/S3-safe (Hadoop FS API).
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/merge_rounds")
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root):
-        return 0
-    statuses = sorted(
-        (s for s in fs.listStatus(root) if s.isDirectory()),
-        key=lambda s: s.getModificationTime(),
-    )
-    removed = 0
-    for s in statuses[: max(0, len(statuses) - max(keep, 0))]:
-        fs.delete(s.getPath(), True)
-        removed += 1
-    return removed
+    return gc_child_dirs(spark, f"{checkpoint_dir}/merge_rounds", keep)
 
 
 # ---- driver-local fast path ---------------------------------------------------

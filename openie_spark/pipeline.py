@@ -7,7 +7,7 @@ Stage graph (SURVEY.md §3, Spark lifecycle):
           ──▶ extract (mapInPandas, narrow)        [checkpoint: triples]
           ──▶ sentence vectors → KMeans sweep      [shuffle: ML fit]
           ──▶ cluster join (equi-join on sentence key)
-          ──▶ node/edge salted aggregation         [shuffle, checkpoints]
+          ──▶ node (salted) / edge aggregation     [shuffle, checkpoints]
           ──▶ merge fixpoint (driver loop)         [checkpoints per result]
           ──▶ top-K filter + bypass
           ──▶ nodes/edges partitioned writes
@@ -190,19 +190,13 @@ def run_pipeline(
         lambda: aggregate_nodes(
             labeled,
             n_salts=cfg.n_salts,
-            salted=True,
             max_descriptions=cfg.max_descriptions,
             dim=cfg.dim,
         ),
     )
     edges = stage(
         "edges_raw",
-        lambda: aggregate_edges(
-            labeled,
-            n_salts=cfg.n_salts,
-            salted=False,  # edge keys are ~unique per occurrence
-            max_descriptions=cfg.max_descriptions,
-        ),
+        lambda: aggregate_edges(labeled, max_descriptions=cfg.max_descriptions),
     )
 
     if not cfg.skip_merge:

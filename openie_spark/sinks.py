@@ -17,9 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .conllu import write_conllu
-
-IS_A = "_is_a_"
-RELATES_TO = "_relates_to_"
+from .rules import IS_A, RELATES_TO
 
 
 def triples_json_df(triples_df: DataFrame) -> DataFrame:

@@ -318,7 +318,8 @@ def make_graph_refresh(
     The state combine is associative (sums, min-occurrence carries, set
     unions; vectors kept as element-wise sums — see graph.py node_state_
     delta), so the refreshed graph equals the batch aggregate_nodes/
-    aggregate_edges output (retry and fold contract: :func:`_fold_refresh`).
+    aggregate_edges output — which is these same deltas over the whole
+    input, finalized (retry and fold contract: :func:`_fold_refresh`).
 
     Triples without a ``cluster`` column (clustering is a global batch
     stage) get cluster=0, matching the batch pipeline's skip_clustering

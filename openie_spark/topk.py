@@ -31,8 +31,8 @@ from typing import Optional, Set, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-IS_A = "_is_a_"
-RELATES_TO = "_relates_to_"
+from .graph import combine_edges
+from .rules import IS_A, RELATES_TO
 
 # bypass pre-filter reachability fixpoint budget: label-homogeneous chains
 # longer than this are synthetic; non-convergence falls back to the coarser
@@ -370,18 +370,7 @@ def _bypass_rounds(
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return out.groupBy("src", "dst", "edge_key").agg(
-            F.sum("weight").alias("weight"),
-            F.min("label").alias("label"),
-            F.min("lemmas").alias("lemmas"),
-            F.min("deprel").alias("deprel"),
-            F.array_distinct(F.flatten(F.collect_list("descriptions"))).alias(
-                "descriptions"
-            ),
-            F.array_distinct(F.flatten(F.collect_list("clusters"))).alias(
-                "clusters"
-            ),
-        )
+        return combine_edges(out)
 
     def one_round(cur: DataFrame) -> DataFrame:
         """ONE bypass round as a LAZY plan: input rows in edge_cols (rows
@@ -479,21 +468,7 @@ def _bypass_rounds(
             .join(batch.withColumnRenamed("lemma_key", "dst"), "dst", "left_anti")
         )
         return (
-            untouched.select(bypass.columns)
-            .unionByName(bypass)
-            .groupBy("src", "dst", "edge_key")
-            .agg(
-                F.sum("weight").alias("weight"),
-                F.min("label").alias("label"),
-                F.min("lemmas").alias("lemmas"),
-                F.min("deprel").alias("deprel"),
-                F.array_distinct(F.flatten(F.collect_list("descriptions"))).alias(
-                    "descriptions"
-                ),
-                F.array_distinct(F.flatten(F.collect_list("clusters"))).alias(
-                    "clusters"
-                ),
-            )
+            combine_edges(untouched.select(bypass.columns).unionByName(bypass))
             .join(k_src.withColumn("src_kept", F.lit(True)), "src", "left")
             .join(k_dst.withColumn("dst_kept", F.lit(True)), "dst", "left")
             .withColumn("src_kept", F.coalesce(src_kept, F.lit(False)))

@@ -82,6 +82,39 @@ def test_merge_mapping_rewrite_is_broadcast(spark):
     assert "BroadcastHashJoin" in _plan(me)
 
 
+def test_node_aggregation_salted_edge_aggregation_single_shuffle(spark):
+    """Salting is decided once per table, for batch and stream alike: the
+    node aggregation is salted two-phase — exactly two hash exchanges,
+    (lemma_key, salt) then lemma_key — and the edge aggregation (keys ~1:1
+    with triples) exactly one. An unsalted node path or an extra edge
+    shuffle changes these counts."""
+    from openie_spark.graph import (
+        aggregate_edges,
+        aggregate_nodes,
+        edge_state_delta,
+        node_state_delta,
+    )
+
+    t = spark.createDataFrame(
+        [
+            (f"u{i % 5}", i, f"s{i}", "a", f"a{i % 3}", "r", "r", "b",
+             f"b{i % 2}", "obj", [1.0, 2.0], [0.5, 0.5], i % 2)
+            for i in range(20)
+        ],
+        "url string, sent_id int, sent_text string, left_arg string, "
+        "left_arg_lemmas string, relation string, relation_lemmas string, "
+        "right_arg string, right_arg_lemmas string, right_deprel string, "
+        "left_vec array<float>, right_vec array<float>, cluster int",
+    )
+    for df in (aggregate_nodes(t, dim=2), node_state_delta(t, dim=2)):
+        plan = _plan(df)
+        assert plan.count("Exchange hashpartitioning") == 2, plan[:3000]
+        assert "salt" in plan, plan[:3000]
+    for df in (aggregate_edges(t), edge_state_delta(t)):
+        plan = _plan(df)
+        assert plan.count("Exchange hashpartitioning") == 1, plan[:3000]
+
+
 def test_minhash_signatures_plan_is_narrow(spark):
     """The r4 signature fold must stay a pure narrow projection: one string
     hash per shingle + affine lane mixes, NO shuffle — a regression to an
